@@ -11,7 +11,12 @@ counts the documents whose output is missing or disagrees.
   word-trigram sets; the surviving documents must be one per duplicate
   cluster of the reported pairs; a pure-Python first-occurrence line
   dedup over the survivors must equal ``global_line_dedup``'s output.
-  Recall on the planted copies is reported, not checked.
+  Every planted copy whose exact Jaccard with its original is at least
+  ``RECALL_MARGIN`` above the threshold must share a cluster with it:
+  there the 8x4 banding misses a pair with probability below 2e-4, and
+  inputs and hashing are seeded, so a seed's outcome does not change
+  from run to run.
+  Recall over all planted copies at or above the threshold is reported.
 
 The reference is loaded as a private module instance per configuration
 (its scorers and thresholds are module attributes), so no state leaks
@@ -33,6 +38,7 @@ from dqmtools_spark.synth import gen_page
 from gen import jaccard, shingles
 
 _REFERENCE = "tests/reference_impl.py"
+RECALL_MARGIN = 0.1
 
 
 def _reference_labeler(root: str, thresholds: dict | None, models: dict | None):
@@ -112,7 +118,7 @@ class Checker:
     # ------------------------------------------------------ workloads
 
     def warc_filter(self, out: dict) -> tuple[int, list[str], dict]:
-        failed, notes = self._sample_failures(out["sample"], out["thresholds"])
+        failed, notes = self._sample_failures(out["sample"], None)
         if out["docs_out"] != self.n:
             notes.append(f"docs_out {out['docs_out']} != records {self.n}")
             failed += abs(self.n - out["docs_out"])
@@ -192,7 +198,15 @@ class Checker:
                 notes.append(f"doc {d}: line dedup differs")
                 bad_docs.add(d)
 
-        planted = [(a, b) for a, b, j in self.m["planted"] if j >= thr]
+        planted = []
+        for a, b, _ in self.m["planted"]:
+            exact = jaccard(shingle_set(a), shingle_set(b))
+            if exact < thr:
+                continue
+            planted.append((a, b))
+            if exact >= thr + RECALL_MARGIN and find(a) != find(b):
+                notes.append(f"planted pair ({a},{b}) jaccard {exact:.3f} not found")
+                bad_docs.add(b)
         found = sum(1 for a, b in planted if find(a) == find(b))
         layers = {
             "dedup.pairs_found": len(out["pairs"]),

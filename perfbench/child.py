@@ -125,8 +125,7 @@ def main() -> None:
     iter_spans = []
     with PeakRss(tree) as rss:
         loop_start = time.perf_counter()
-        # the warm-up ran iteration 0, so the first timed iteration is a
-        # re-run under the other parameter set
+        # iteration 0 was the warm-up
         i = 1
         while True:
             spark.catalog.clearCache()

@@ -10,15 +10,10 @@ written and the input properties the program's behaviour depends on:
 planted-duplicate share, boilerplate-line share, and the distinct token
 and trigram counts measured against the models' memo cap
 (``ArpaLM._MEMO_CAP`` / ``FastTextModel._MEMO_CAP``).
-
-Standalone use::
-
-    PYTHONPATH=. python3 perfbench/gen.py --workload near_dup --seed 1 --docs 500 --out .perfbench/nd
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import random
@@ -222,19 +217,3 @@ def generate(workload: str, seed: int, docs: int, out: str) -> dict:
     os.sync()
     return manifest
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--workload", required=True, choices=sorted(_GENERATORS))
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--docs", type=int, required=True)
-    ap.add_argument("--out", required=True)
-    args = ap.parse_args()
-    m = generate(args.workload, args.seed, args.docs, args.out)
-    m.pop("planted", None)
-    m.pop("sample_ids", None)
-    print(json.dumps(m))
-
-
-if __name__ == "__main__":
-    main()

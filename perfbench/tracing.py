@@ -54,7 +54,8 @@ class ProcTree:
         return out
 
     def python_pids(self) -> list[int]:
-        """Descendants running Python (the PySpark daemon and workers)."""
+        """Descendants running Python (the PySpark daemon and workers),
+        by executable name: the JVM's own arguments name ``pyspark``."""
         out = []
         for pid in self.pids():
             if pid == self.root:
@@ -64,7 +65,7 @@ class ProcTree:
                     cmd = fh.read()
             except OSError:
                 continue
-            if b"python" in cmd or b"pyspark" in cmd:
+            if b"python" in os.path.basename(cmd.split(b"\0", 1)[0]):
                 out.append(pid)
         return out
 
@@ -99,9 +100,12 @@ class ProcTree:
 
 
 class PeakRss:
-    """Sample the tree's resident memory every ``INTERVAL_S`` between
-    :meth:`reset` and :meth:`peak`; look for new worker processes every
-    ``RESCAN_EVERY`` samples."""
+    """Sample the resident memory of the driver JVM and its Python
+    processes every ``INTERVAL_S`` between :meth:`reset` and
+    :meth:`peak`; look for new worker processes every ``RESCAN_EVERY``
+    samples.  Other descendants are left out: the JVM starts helper
+    processes by vfork, and until its exec such a child reports the
+    whole JVM's resident set as its own."""
 
     INTERVAL_S = 0.05
     RESCAN_EVERY = 10
@@ -126,15 +130,18 @@ class PeakRss:
         n = 0
         while not self._stop.wait(self.INTERVAL_S):
             if n % self.RESCAN_EVERY == 0:
-                pids = self.tree.pids()
+                pids = self._pids()
             n += 1
             rss = self.tree.rss_mb(pids)
             with self._lock:
                 self._peak = max(self._peak, rss)
 
+    def _pids(self) -> list[int]:
+        return [self.tree.root, *self.tree.python_pids()]
+
     def reset(self) -> None:
         with self._lock:
-            self._peak = self.tree.rss_mb(self.tree.pids())
+            self._peak = self.tree.rss_mb(self._pids())
 
     def peak(self) -> float:
         with self._lock:

@@ -10,9 +10,9 @@ Each workload is a class built inside a live Spark session with:
   its own (a layer inside a fused job has no wall time of its own).
 
 Every layer call sits in a ``tracer.span``; a disabled tracer costs
-nothing.  Iteration ``i`` uses parameter set ``i % 2``: on workloads
-without a durable checkpoint a threshold change re-runs the whole plan,
-so each iteration is a re-run after a change.
+nothing.  ``warc_filter`` and ``near_dup`` keep no checkpoint, so a
+threshold change there re-runs the whole plan: their ``rerun_s`` is the
+iteration's wall time, under the default parameters.
 """
 
 from __future__ import annotations
@@ -56,8 +56,8 @@ ARPA_MODEL = "artifacts/webtext_en_3gram.arpa.gz"
 
 # the "thresholds changed" resubmit: a stricter length and repetition gate
 CHANGED_THRESHOLDS = {"min_word_count": 25, "max_repeated_line_fraction": 0.2}
-# near_dup's parameter sets: the operator's default and a looser gate
-DEDUP_THRESHOLDS = (0.8, 0.75)
+# near_dup's Jaccard threshold: minhash_lsh_pairs' default
+DEDUP_THRESHOLD = 0.8
 
 N_BUCKETS = 8
 SAMPLE_COLS = ("url", "keep", "reasons", "scrubbed_text", "lang_pred")
@@ -96,9 +96,6 @@ def _sample_rows(rows) -> list[dict]:
 
 
 class Workload:
-    # parameter sets the iterations alternate between
-    params: tuple = (None,)
-
     def __init__(self, spark, manifest: dict, work_dir: str, tracer, root: str):
         self.spark = spark
         self.m = manifest
@@ -138,8 +135,6 @@ class WarcFilter(Workload):
     """read_warc -> run_pipeline with the committed real models -> an
     aggregate that writes nothing."""
 
-    params = (None, CHANGED_THRESHOLDS)
-
     def __init__(self, *a, **kw):
         super().__init__(*a, **kw)
         self.langid_path = os.path.join(self.root, LANGID_MODEL)
@@ -151,14 +146,12 @@ class WarcFilter(Workload):
         self.sample_urls = self.sample_urls_of()
 
     def iteration(self, i: int) -> dict:
-        thresholds = self.params[i % 2]
         sampled = F.col("url").isin(self.sample_urls)
         t0 = time.perf_counter()
         with self.tracer.span("pipeline.run_pipeline"):
             result, _ = run_pipeline(
                 self.spark,
                 read_warc(self.spark, self.m["warc_dir"]),
-                registry=default_registry(thresholds) if thresholds else None,
                 models=self.models,
             )
             row = result.agg(
@@ -173,7 +166,6 @@ class WarcFilter(Workload):
             "outputs": {
                 "docs_out": row["docs"],
                 "kept": row["kept"],
-                "thresholds": thresholds,
                 "sample": _sample_rows(row["sample"]),
             },
         }
@@ -218,8 +210,6 @@ class StagedRerun(Workload):
     """The production ``--staged`` job as three steps: first submit,
     resubmit with changed thresholds reusing the text checkpoint, and
     an idempotent resubmit of the first output."""
-
-    params = (None,)
 
     def __init__(self, *a, **kw):
         super().__init__(*a, **kw)
@@ -340,15 +330,12 @@ class NearDup(Workload):
     """minhash_lsh_pairs -> drop_duplicate_clusters -> global_line_dedup
     over the survivors, collected to the driver."""
 
-    params = DEDUP_THRESHOLDS
-
     def iteration(self, i: int) -> dict:
-        threshold = self.params[i % 2]
         tr = self.tracer
         t0 = time.perf_counter()
         docs = self.spark.read.parquet(self.m["corpus_path"])
         with tr.span("dedup.minhash"):
-            pairs = minhash_lsh_pairs(docs, "text", "doc_id", threshold=threshold, eager=True)
+            pairs = minhash_lsh_pairs(docs, "text", "doc_id", threshold=DEDUP_THRESHOLD, eager=True)
             pair_rows = pairs.collect()
         with tr.span("dedup.clusters"):
             survivors = drop_duplicate_clusters(docs, pairs, "doc_id")
@@ -360,7 +347,7 @@ class NearDup(Workload):
             "docs": self.n,
             "rerun_s": wall,
             "outputs": {
-                "threshold": threshold,
+                "threshold": DEDUP_THRESHOLD,
                 "pairs": [[r["id_a"], r["id_b"], r["jaccard"]] for r in pair_rows],
                 "deduped": [[r["doc_id"], r["deduped_text"], r["n_kept"]] for r in deduped],
             },
@@ -376,7 +363,7 @@ WORKLOADS = {
     "near_dup": NearDup,
 }
 
-# docs per workload: one iteration takes 2-8 s on a 4-core machine, so a
+# docs per workload: one iteration takes 3-8 s on a 4-core machine, so a
 # run (cold set-up, warm-up, loop) ends in about 30-40 s
-DOCS = {"warc_filter": 2000, "staged_rerun": 2000, "near_dup": 2000}
+DOCS = {"warc_filter": 2000, "staged_rerun": 1500, "near_dup": 1500}
 
