@@ -125,8 +125,8 @@ def main() -> None:
     iter_spans = []
     with PeakRss(tree) as rss:
         loop_start = time.perf_counter()
-        # iteration 0 was the warm-up
-        i = 1
+        # the iterations before wl.warmups were the warm-up
+        i = wl.warmups
         while True:
             spark.catalog.clearCache()
             os.sync()

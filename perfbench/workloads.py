@@ -2,7 +2,8 @@
 
 Each workload is a class built inside a live Spark session with:
 
-- ``warm()``: the uncounted warm-up, the exact timed plan run once;
+- ``warm()``: the uncounted warm-up, the exact timed plan run
+  ``warmups`` times;
 - ``iteration(i)``: one closed-loop unit of work, timed by the caller;
   it returns the documents judged, the wall time of the re-run after a
   threshold change (``rerun_s``) and the outputs the checker needs;
@@ -96,6 +97,9 @@ def _sample_rows(rows) -> list[dict]:
 
 
 class Workload:
+    # uncounted runs of the timed plan before the timed loop
+    warmups = 1
+
     def __init__(self, spark, manifest: dict, work_dir: str, tracer, root: str):
         self.spark = spark
         self.m = manifest
@@ -105,8 +109,9 @@ class Workload:
         self.n = manifest["records"]
 
     def warm(self) -> None:
-        self.iteration(0)
-        self.cleanup()
+        for i in range(self.warmups):
+            self.iteration(i)
+            self.cleanup()
 
     def cleanup(self) -> None:
         """Drop what an iteration left behind (untimed)."""
@@ -209,7 +214,13 @@ class WarcFilter(Workload):
 class StagedRerun(Workload):
     """The production ``--staged`` job as three steps: first submit,
     resubmit with changed thresholds reusing the text checkpoint, and
-    an idempotent resubmit of the first output."""
+    an idempotent resubmit of the first output.
+
+    Two warm-ups: after one, the next iteration's time still varied by
+    about 8% from run to run on an idle 4-core host while the JVM kept
+    compiling; after two, by about 4%."""
+
+    warmups = 2
 
     def __init__(self, *a, **kw):
         super().__init__(*a, **kw)
