@@ -42,10 +42,13 @@ from __future__ import annotations
 
 import gzip
 import math
+import os
 import struct
 from collections import Counter
+from itertools import chain
 
 import numpy as np
+import pandas as pd
 
 # =====================================================================
 # Part 1 — ARPA backoff language model (KenLM/SRILM interchange format)
@@ -126,6 +129,9 @@ class ArpaLM:
         self.table = table
         self.vocab = {ng[0] for ng in table[1]}
         self._score_memo: dict[tuple, float] = {}
+        # perplexity_batch state: the same scores keyed by vocab-id rows
+        self._id_memo: dict[tuple, float] = {}
+        self._vocab_ids: tuple | None = None
 
     # -- scoring ------------------------------------------------------
 
@@ -177,6 +183,77 @@ class ArpaLM:
             return None
         lp, n = self.sentence_logprob(toks)
         return float(10.0 ** (-lp / n))
+
+    def perplexity_batch(self, token_lists: list[list[str] | None]) -> list[float | None]:
+        """``text_perplexity`` of a batch of documents given as
+        ``text.lower().split()`` token lists (``None`` for a missing or
+        empty text), bit-identical to scoring each text on its own.
+
+        The batch's tokens become vocabulary ids and every scored event
+        an ``order``-wide id row; each distinct row is scored once,
+        through a capped memo keyed by id rows.  Each document's log-probabilities are
+        then added strictly in token order (``np.add.at`` applies its
+        updates one at a time, in index order), as
+        :meth:`sentence_logprob` adds them.
+        """
+        out: list[float | None] = [None] * len(token_lists)
+        docs = [i for i, toks in enumerate(token_lists) if toks]
+        if not docs:
+            return out
+        ids, words, bos, eos, unk = self._batch_vocab()
+        lists = [token_lists[i] for i in docs]
+        codes, uniq = pd.factorize(np.fromiter(chain.from_iterable(lists), dtype=object))
+        tok_id = np.fromiter((ids.get(w, unk) for w in uniq), np.int64, len(uniq))[codes]
+
+        # one block per document: order-1 <s> pads, its tokens, </s>
+        pad = self.order - 1
+        events = np.fromiter(map(len, lists), np.int64, len(lists)) + 1
+        n_ev = int(events.sum())
+        ev_doc = np.repeat(np.arange(len(lists)), events)
+        ev_pos = np.arange(n_ev) + pad * (ev_doc + 1)
+        seq = np.full(n_ev + pad * len(lists), bos, np.int64)
+        is_eos = np.zeros(n_ev, bool)
+        is_eos[np.cumsum(events) - 1] = True
+        seq[ev_pos] = eos
+        seq[ev_pos[~is_eos]] = tok_id
+        grams = np.stack([seq[ev_pos - pad + k] for k in range(self.order)], axis=1)
+
+        # distinct rows, one column at a time: a batch-local id of the
+        # first k columns stays below the event count, so id * V + next
+        # never overflows however large the vocabulary and the order
+        inverse = grams[:, 0]
+        for k in range(1, self.order):
+            inverse = pd.factorize(inverse * len(words) + grams[:, k])[0]
+        # factorize numbers rows in order of first appearance
+        seen = np.maximum.accumulate(np.concatenate(([-1], inverse[:-1])))
+        rows = grams[inverse > seen]
+        keys = list(zip(*(rows[:, k].tolist() for k in range(self.order))))
+        memo = self._id_memo
+        lp = [memo.get(key) for key in keys]
+        for i in [i for i, v in enumerate(lp) if v is None]:
+            ng = tuple(words[rows[i]].tolist())
+            lp[i] = self.word_logprob(ng[:-1], ng[-1])
+            if len(memo) < self._MEMO_CAP:
+                memo[keys[i]] = lp[i]
+        totals = np.zeros(len(lists))
+        np.add.at(totals, ev_doc, np.array(lp)[inverse])
+        for i, lp_sum, n in zip(docs, totals.tolist(), events.tolist()):
+            out[i] = float(10.0 ** (-lp_sum / n))
+        return out
+
+    def _batch_vocab(self) -> tuple[dict[str, int], np.ndarray, int, int, int]:
+        """(vocab word -> id, id -> word, <s> id, </s> id, <unk> id),
+        built on first batch use.  A token outside the vocabulary maps
+        to <unk> even when it spells a marker, as in :meth:`_norm`."""
+        if self._vocab_ids is None:
+            vocab = sorted(self.vocab)
+            words = vocab + [m for m in (BOS, EOS, UNK) if m not in self.vocab]
+            self._vocab_ids = (
+                {w: i for i, w in enumerate(vocab)},
+                np.array(words, dtype=object),
+                *(words.index(m) for m in (BOS, EOS, UNK)),
+            )
+        return self._vocab_ids
 
 
 def train_arpa(
@@ -403,6 +480,53 @@ def ft_subwords(word: str, minn: int, maxn: int) -> list[str]:
     return out
 
 
+_FNV_OFFSET = np.uint32(2166136261)
+_FNV_PRIME = np.uint32(16777619)
+# byte -> the uint32 fastText xors in: bytes >= 0x80 sign-extended (int8_t)
+_FNV_BYTE = np.arange(256, dtype=np.uint32)
+_FNV_BYTE[128:] |= np.uint32(0xFFFFFF00)
+
+
+def ft_subword_hashes(words: list[str], minn: int, maxn: int) -> tuple[np.ndarray, np.ndarray]:
+    """``[ft_hash(g) for w in words for g in ft_subwords(w, minn, maxn)]``
+    in one numpy pass: returns those uint32 hashes and the n-gram count
+    of each word.
+
+    The n-grams that start at one codepoint are prefixes of each other,
+    so one FNV-1a walk per start codepoint, one byte per step, yields
+    all of them: the hash of a gram is the walk's state after the
+    gram's last byte.  The walks of every codepoint of every word run
+    side by side, at most ``4 * maxn`` steps."""
+    if not words or maxn < max(minn, 1):
+        return np.empty(0, dtype=np.uint32), np.zeros(len(words), dtype=np.int64)
+    decorated = [("<" + w + ">").encode("utf-8") for w in words]
+    lens = np.fromiter(map(len, decorated), np.int64, len(decorated))
+    ends = np.cumsum(lens)
+    nbytes = int(ends[-1])
+    buf = np.frombuffer(b"".join(decorated) + bytes(4 * maxn), dtype=np.uint8)
+    starts = np.flatnonzero((buf[:nbytes] & 0xC0) != 0x80)
+    # codepoint boundaries: each word ends where the next one starts
+    bounds = np.append(starts, nbytes)
+    word = np.searchsorted(ends, starts, side="right")
+    n = np.arange(1, maxn + 1)
+    stop = np.arange(len(starts))[:, None] + n  # boundary after n codepoints
+    valid = (stop <= np.searchsorted(bounds, ends)[word][:, None]) & (n >= minn)
+    stop = bounds[np.minimum(stop, len(bounds) - 1)]
+    if minn <= 1:  # no 1-gram on the '<' or '>' decoration
+        valid[:, 0] &= (starts != (ends - lens)[word]) & (stop[:, 0] != ends[word])
+    length = np.where(valid, stop - starts[:, None], 1)
+    steps = int(length.max())
+    state = np.empty((len(starts), steps), dtype=np.uint32)
+    h = np.full(len(starts), _FNV_OFFSET)
+    for k in range(steps):
+        h ^= _FNV_BYTE[buf[starts + k]]
+        h *= _FNV_PRIME
+        state[:, k] = h
+    hashes = np.take_along_axis(state, length - 1, axis=1)[valid]
+    counts = np.bincount(word, weights=valid.sum(axis=1), minlength=len(words))
+    return hashes, counts.astype(np.int64)
+
+
 class FastTextModel:
     """A supervised fastText model: dictionary + dense matrices.
 
@@ -426,6 +550,12 @@ class FastTextModel:
         self.w_out = w_out      # (nlabels, dim) float32
         self.ntokens = ntokens
         self._token_id_memo: dict[str, list[int]] = {}
+        # predict_batch state, allocated on first use: token -> memo slot,
+        # each slot's summed w_in row and id count
+        self._tok_slot: dict[str, int] | None = None
+        self._tok_rows: np.ndarray | None = None
+        self._tok_cnt: np.ndarray | None = None
+        self._batch_scale: float | None = None
 
     # -- features -----------------------------------------------------
 
@@ -461,9 +591,8 @@ class FastTextModel:
 
     # -- inference ----------------------------------------------------
 
-    def predict_scores(self, text: str) -> np.ndarray:
-        ids = self.features(text)
-        if not ids:
+    def _scores(self, ids) -> np.ndarray:
+        if not len(ids):
             return np.full(len(self.labels), 1.0 / max(len(self.labels), 1))
         hidden = self.w_in[np.asarray(ids)].mean(axis=0)
         z = self.w_out @ hidden
@@ -471,14 +600,148 @@ class FastTextModel:
         e = np.exp(z)
         return e / e.sum()
 
+    def predict_scores(self, text: str) -> np.ndarray:
+        return self._scores(self.features(text))
+
+    def _label(self, k: int) -> str:
+        lab = self.labels[k][0]
+        return lab[len(_LABEL_PREFIX):] if lab.startswith(_LABEL_PREFIX) else lab
+
     def predict(self, text: str | None) -> str:
         """text -> bare language code (label prefix stripped); 'und'
         for empty input — the drop-in ``langid_fn`` for the seam."""
         if not text:
             return "und"
-        scores = self.predict_scores(text)
-        lab = self.labels[int(np.argmax(scores))][0]
-        return lab[len(_LABEL_PREFIX):] if lab.startswith(_LABEL_PREFIX) else lab
+        return self._label(int(np.argmax(self.predict_scores(text))))
+
+    # -- batch inference ------------------------------------------------
+
+    # distinct unseen tokens hashed per numpy pass, and tokens summed per
+    # gather: bounds the transient arrays whatever the batch holds
+    _HASH_CHUNK = 4096
+    _SUM_CHUNK = 1 << 16
+
+    def predict_batch(self, token_lists: list[list[str] | None]) -> list[str]:
+        """``predict`` of a batch of documents given as
+        ``text.lower().split()`` token lists (``None`` for a missing or
+        empty text), with the same labels as predicting each text.
+
+        Each distinct token's feature rows are summed once and memoized
+        (one ``dim``-wide float32 row and an id count per token); a
+        document's hidden vector is then a segmented sum over its
+        tokens, and one matrix product scores the batch.  Summing per
+        token reorders the float32 additions, which moves each logit by
+        at most ``2u(n + dim)·W``, W = ``max_k Σ_j |w_out[k,j]|·max_i
+        |w_in[i,j]|`` (u = 2^-24, n ids in the document).  A document
+        whose top two logits are closer than ``8u((n + dim + 1)·W + 4)``
+        (twice that bound with a 2x margin, plus a few ulps so that
+        ``predict``'s softmax cannot round the two to a tie) is scored
+        exactly as ``predict`` scores it, so no label can differ.
+        """
+        out = ["und"] * len(token_lists)
+        docs = [i for i, toks in enumerate(token_lists) if toks is not None]
+        if not docs:
+            return out
+        lists = [token_lists[i] for i in docs]
+        ntok = np.fromiter(map(len, lists), np.int64, len(lists))
+        offsets = np.concatenate(([0], np.cumsum(ntok)))
+        codes, uniq = pd.factorize(np.fromiter(chain.from_iterable(lists), dtype=object))
+        rows, cnt = self._distinct_token_rows(uniq)
+
+        dim = self.w_in.shape[1]
+        sums = np.zeros((len(lists), dim), dtype=np.float32)
+        for lo in range(0, len(codes), self._SUM_CHUNK):
+            hi = min(lo + self._SUM_CHUNK, len(codes))
+            seg = np.clip(offsets, lo, hi) - lo
+            nonempty = seg[1:] > seg[:-1]
+            sums[nonempty] += np.add.reduceat(rows[codes[lo:hi]], seg[:-1][nonempty], axis=0)
+        n = np.concatenate(([0], np.cumsum(cnt[codes])))[offsets]
+        n = n[1:] - n[:-1]
+        eos = self.word_id.get(EOS)
+        if eos is not None:
+            sums += self.w_in[eos]
+            n += 1
+
+        scored = n > 0
+        z = (sums[scored] / n[scored, None].astype(np.float32)) @ self.w_out.T
+        best = np.zeros(len(lists), dtype=np.int64)
+        best[scored] = np.argmax(z, axis=1)
+        exact = ~scored
+        if z.shape[1] > 1:
+            top2 = np.partition(z, -2, axis=1)[:, -2:]
+            tol = 8 * 2.0**-24 * ((n[scored] + dim + 1) * self._logit_scale() + 4)
+            exact[scored] = top2[:, 1] - top2[:, 0] <= tol
+        for j in np.flatnonzero(exact):
+            best[j] = np.argmax(self._scores(self._doc_ids(lists[j])))
+        for i, k in zip(docs, best.tolist()):
+            out[i] = self._label(k)
+        return out
+
+    def _logit_scale(self) -> float:
+        """max_k Σ_j |w_out[k,j]| · max_i |w_in[i,j]| — bounds how far a
+        float32 error in the hidden vector moves a logit."""
+        if self._batch_scale is None:
+            self._batch_scale = float(
+                (np.abs(self.w_out) @ np.abs(self.w_in).max(axis=0)).max()
+            )
+        return self._batch_scale
+
+    def _doc_ids(self, toks: list[str]) -> list[int]:
+        """``features`` of a token list, hashed without the id memo."""
+        hashes, ngrams = ft_subword_hashes(toks, self.args["minn"], self.args["maxn"])
+        sub = (len(self.words) + hashes % self.args["bucket"]).tolist()
+        ids: list[int] = []
+        at = 0
+        for tok, k in zip(toks, ngrams.tolist()):
+            wid = self.word_id.get(tok)
+            if wid is not None:
+                ids.append(wid)
+            ids.extend(sub[at:at + k])
+            at += k
+        eos = self.word_id.get(EOS)
+        if eos is not None:
+            ids.append(eos)
+        return ids
+
+    def _distinct_token_rows(self, uniq: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(summed w_in rows, id counts) of the batch's distinct tokens:
+        from the token memo where present, else hashed in chunks and
+        memoized while the memo has room."""
+        dim = self.w_in.shape[1]
+        if self._tok_slot is None:
+            self._tok_slot = {}
+            self._tok_rows = np.empty((self._MEMO_CAP, dim), dtype=np.float32)
+            self._tok_cnt = np.empty(self._MEMO_CAP, dtype=np.int64)
+        memo = self._tok_slot
+        slot = np.fromiter((memo.get(t, -1) for t in uniq), np.int64, len(uniq))
+        rows = np.empty((len(uniq), dim), dtype=np.float32)
+        cnt = np.empty(len(uniq), dtype=np.int64)
+        seen = slot >= 0
+        rows[seen] = self._tok_rows[slot[seen]]
+        cnt[seen] = self._tok_cnt[slot[seen]]
+        nwords, bucket = len(self.words), self.args["bucket"]
+        unseen = np.flatnonzero(~seen)
+        for lo in range(0, len(unseen), self._HASH_CHUNK):
+            idx = unseen[lo:lo + self._HASH_CHUNK]
+            toks = uniq[idx].tolist()
+            hashes, ngrams = ft_subword_hashes(toks, self.args["minn"], self.args["maxn"])
+            r = np.zeros((len(toks), dim), dtype=np.float32)
+            has = ngrams > 0
+            if hashes.size:
+                first = np.cumsum(ngrams) - ngrams
+                ids = nwords + (hashes % bucket).astype(np.int64)
+                r[has] = np.add.reduceat(self.w_in[ids], first[has], axis=0)
+            wid = np.fromiter((self.word_id.get(t, -1) for t in toks), np.int64, len(toks))
+            known = wid >= 0
+            r[known] += self.w_in[wid[known]]
+            rows[idx], cnt[idx] = r, ngrams + known
+            room = min(self._MEMO_CAP - len(memo), len(toks))
+            if room > 0:
+                at = len(memo)
+                self._tok_rows[at:at + room] = r[:room]
+                self._tok_cnt[at:at + room] = cnt[idx[:room]]
+                memo.update(zip(toks[:room], range(at, at + room)))
+        return rows, cnt
 
 
 def train_fasttext_supervised(
@@ -591,42 +854,73 @@ def save_fasttext_bin(model: FastTextModel, path: str) -> None:
 # ------------------------------------------- per-worker-process cache
 #
 # Shipping a bound model method in the UDF closure re-unpickles the
-# whole model PER TASK and starts every task with cold memos.  These
-# path-based factories ship only the artifact path; each Python worker
-# process loads the file once (module-level cache) and keeps it — and
-# its Zipfian memos — warm across every task the reused worker runs.
-# The reference's channel-map-per-decoder pattern, at worker scope.
-# On a cluster the artifact must be visible to executors (ship via
-# ``spark-submit --files`` or a shared store); local mode just works.
+# whole model PER TASK and starts every task with cold memos.  The
+# path-based handles ship only the artifact path; each Python worker
+# process loads the file once and keeps it — and its Zipfian memos —
+# warm across every task the reused worker runs.  The reference's
+# channel-map-per-decoder pattern, at worker scope.  On a cluster the
+# artifact must be visible to executors (ship via ``spark-submit
+# --files`` or a shared store); local mode just works.
 
-_PROCESS_CACHE: dict[str, object] = {}
-
-
-def _cached(path: str, loader):
-    m = _PROCESS_CACHE.get(path)
-    if m is None:
-        m = _PROCESS_CACHE.setdefault(path, loader(path))
-    return m
+_PROCESS_CACHE: dict[tuple, object] = {}
 
 
-def langid_fn_from_path(path: str):
-    """``text -> lang`` callable for the seam: loads the fastText .bin
-    once per worker process (see module note above)."""
+def process_cached(loader, path: str | None = None):
+    """``loader(path)`` — or ``loader()`` with no path — once per
+    process.  Keyed by (loader, path, size, mtime_ns): an artifact
+    replaced in place reloads, and one path read by two loaders gives
+    each its own model.  A reload drops the replaced model, memos and
+    all."""
+    if path is None:
+        key = (loader, None, None, None)
+    else:
+        st = os.stat(path)
+        key = (loader, path, st.st_size, st.st_mtime_ns)
+    model = _PROCESS_CACHE.get(key)
+    if model is None:
+        model = loader(path) if path is not None else loader()
+        for stale in [k for k in _PROCESS_CACHE if k[:2] == key[:2]]:
+            del _PROCESS_CACHE[stale]
+        _PROCESS_CACHE[key] = model
+    return model
 
-    def predict(text):
-        return _cached(path, load_fasttext_bin).predict(text)
 
-    return predict
+class _LangidFromPath:
+    """``text -> lang`` over the fastText .bin at ``path``, loaded once
+    per worker process; ``batch`` labels a batch of token lists."""
+
+    def __init__(self, path: str):
+        self.path = path
+
+    def __call__(self, text):
+        return process_cached(load_fasttext_bin, self.path).predict(text)
+
+    def batch(self, token_lists):
+        return process_cached(load_fasttext_bin, self.path).predict_batch(token_lists)
 
 
-def ppl_fn_from_path(path: str):
-    """``text -> perplexity`` callable for the seam: loads the ARPA LM
-    once per worker process."""
+class _PerplexityFromPath:
+    """``text -> perplexity`` over the ARPA LM at ``path``, loaded once
+    per worker process; ``batch`` scores a batch of token lists."""
 
-    def text_perplexity(text):
-        return _cached(path, load_arpa).text_perplexity(text)
+    def __init__(self, path: str):
+        self.path = path
 
-    return text_perplexity
+    def __call__(self, text):
+        return process_cached(load_arpa, self.path).text_perplexity(text)
+
+    def batch(self, token_lists):
+        return process_cached(load_arpa, self.path).perplexity_batch(token_lists)
+
+
+def langid_fn_from_path(path: str) -> _LangidFromPath:
+    """Picklable ``langid_fn`` for the seam that ships only ``path``."""
+    return _LangidFromPath(path)
+
+
+def ppl_fn_from_path(path: str) -> _PerplexityFromPath:
+    """Picklable ``ppl_fn`` for the seam that ships only ``path``."""
+    return _PerplexityFromPath(path)
 
 
 def load_fasttext_bin(path: str) -> FastTextModel:

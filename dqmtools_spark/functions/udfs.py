@@ -2,10 +2,10 @@
 
 Each UDF wraps a canonical pure function from ``textproc.py`` (the
 byte-identical contract) in an Arrow-batched pandas UDF.  Models
-(unigram LM) are built lazily once per executor process via a
-module-level singleton — the reference's channel-map-per-decoder
-pattern (``dataframe_creator.py:32-116``) re-expressed as broadcast-free
-deterministic state.
+(unigram LM) are built lazily once per executor process through the
+process model cache (``models.process_cached``) — the reference's
+channel-map-per-decoder pattern (``dataframe_creator.py:32-116``)
+re-expressed as broadcast-free deterministic state.
 
 No per-row Spark UDFs (``F.udf``) anywhere (BASELINE input_hint).
 """
@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dqmtools_spark.functions import textproc
+from dqmtools_spark.functions.models import process_cached
 
 # ---------------------------------------------------------------- extract
 
@@ -25,55 +26,6 @@ from dqmtools_spark.functions import textproc
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """HTML bytes -> extracted text (byte-identical per url)."""
     return html.map(textproc.extract_text)
-
-
-# ---------------------------------------------------------------- langid
-
-
-@F.pandas_udf(T.StringType())
-def langid_udf(text: pd.Series) -> pd.Series:
-    """Deterministic marker-based language ID (fastText stand-in)."""
-    return text.map(textproc.predict_lang)
-
-
-# ---------------------------------------------------------------- perplexity
-
-_MODEL_CACHE: dict[str, object] = {}
-
-
-def _get_lm() -> tuple[dict[str, float], float]:
-    if "lm" not in _MODEL_CACHE:
-        _MODEL_CACHE["lm"] = textproc.lm_and_oov()
-    return _MODEL_CACHE["lm"]  # type: ignore[return-value]
-
-
-@F.pandas_udf(T.DoubleType())
-def perplexity_udf(text: pd.Series) -> pd.Series:
-    """KenLM-style per-token perplexity from the deterministic unigram LM."""
-    model, oov = _get_lm()
-    return text.map(lambda t: textproc.perplexity(t, model, oov))
-
-
-# ---------------------------------------------------------------- scrub
-
-_SCRUB_SCHEMA = T.StructType(
-    [T.StructField("scrubbed_text", T.StringType())]
-    + [T.StructField(f"hits_{k}", T.LongType()) for k in textproc.SCRUB_KINDS]
-)
-
-
-@F.pandas_udf(_SCRUB_SCHEMA)
-def scrub_udf(text: pd.Series) -> pd.DataFrame:
-    """PII/toxicity scrub -> (scrubbed_text, per-kind hit counts)."""
-    scrubbed, counters = [], {k: [] for k in textproc.SCRUB_KINDS}
-    for t in text:
-        out, hits = textproc.scrub_text(t)
-        scrubbed.append(out)
-        for k in textproc.SCRUB_KINDS:
-            counters[k].append(hits[k])
-    data = {"scrubbed_text": scrubbed}
-    data.update({f"hits_{k}": v for k, v in counters.items()})
-    return pd.DataFrame(data)
 
 
 # ---------------------------------------------------------------- fused
@@ -95,14 +47,19 @@ PROC_FIELD_NAMES = [f.name for f in _PROC_FIELDS]
 
 def _process_texts(texts: pd.Series, lm=None, langid_fn=None, ppl_fn=None) -> pd.DataFrame:
     if ppl_fn is None:
-        model, oov = lm if lm is not None else _get_lm()
+        model, oov = lm if lm is not None else process_cached(textproc.lm_and_oov)
         ppl_fn = lambda t: textproc.perplexity(t, model, oov)  # noqa: E731
     predict = langid_fn if langid_fn is not None else textproc.predict_lang
-    langs, ppls, scrubbed = [], [], []
+    if hasattr(predict, "batch") and hasattr(ppl_fn, "batch"):
+        token_lists = [t.lower().split() if t else None for t in texts]
+        langs = predict.batch(token_lists)
+        ppls = ppl_fn.batch(token_lists)
+    else:
+        langs = [predict(t) for t in texts]
+        ppls = [ppl_fn(t) for t in texts]
+    scrubbed = []
     counters: dict[str, list[int]] = {k: [] for k in textproc.SCRUB_KINDS}
     for t in texts:
-        langs.append(predict(t))
-        ppls.append(ppl_fn(t))
         out, hits = textproc.scrub_text(t)
         scrubbed.append(out)
         for k in textproc.SCRUB_KINDS:
@@ -132,6 +89,15 @@ def make_process_udfs(lm=None, langid_fn=None, ppl_fn=None):
       the hook for a full backoff LM like
       :class:`~dqmtools_spark.functions.models.ArpaLM.text_perplexity`,
       whose scoring recursion doesn't fit the flat dict shape.
+
+    Batch protocol: when both ``langid_fn`` and ``ppl_fn`` also have a
+    ``batch(token_lists)`` method, each Arrow batch is tokenized once
+    (``text.lower().split()``, ``None`` for a missing or empty text)
+    and each model scores the whole batch in one call, returning one
+    value per text equal to what the per-text call returns.  The
+    path-loaded models (``models.langid_fn_from_path`` and
+    ``models.ppl_fn_from_path``) have it; any other callable is called
+    once per text.
 
     Defaults (both ``None``) keep the lazy per-executor singletons, so
     nothing is shipped in the closure.  Returns

@@ -245,6 +245,51 @@ def test_path_based_handles_cache_per_process_and_match_closure(spark):
         assert lang_h2(t) == ft.predict(t)
         assert ppl_h2(t) == lm.text_perplexity(t)
     # second call reuses the cached object (same identity)
-    before = M._PROCESS_CACHE.get(lp)
+    st = os.stat(lp)
+    key = (M.load_fasttext_bin, lp, st.st_size, st.st_mtime_ns)
+    before = M._PROCESS_CACHE.get(key)
+    assert before is not None
     lang_h2("再 来 一次 的 是")
-    assert M._PROCESS_CACHE.get(lp) is before
+    assert M._PROCESS_CACHE.get(key) is before
+
+
+def test_process_cache_reloads_an_artifact_replaced_in_place(tmp_path):
+    """A retrained artifact written over the old path is loaded again;
+    the replaced model (and its memos) leaves the cache."""
+    from dqmtools_spark.functions import models as M
+
+    path = str(tmp_path / "lm.arpa")
+    write_arpa(_tiny_lm(), path)
+    ppl = M.ppl_fn_from_path(path)
+    text = "the cat sat on the rug"
+    old_model = M.process_cached(M.load_arpa, path)
+    assert ppl(text) == old_model.text_perplexity(text)
+
+    write_arpa(train_arpa([tokenize("the rug sat on the cat")] * 4, order=2), path)
+    retrained = load_arpa(path)
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert ppl(text) == retrained.text_perplexity(text) != old_model.text_perplexity(text)
+    assert ppl.batch([tokenize(text)]) == [retrained.text_perplexity(text)]
+    assert all(m is not old_model for m in M._PROCESS_CACHE.values())
+
+
+def test_process_cache_keeps_loaders_apart(tmp_path):
+    """One path read by both loaders gives each loader its own model:
+    the ARPA handle never gets the fastText model back, or vice versa."""
+    from dqmtools_spark.functions import models as M
+
+    path = str(tmp_path / "model")
+    with open(FT_BIN, "rb") as src, open(path, "wb") as dst:
+        dst.write(src.read())
+    ft = M.process_cached(M.load_fasttext_bin, path)
+    assert isinstance(ft, M.FastTextModel)
+    with pytest.raises(ValueError):  # the ARPA parser rejects the .bin
+        M.ppl_fn_from_path(path)("the cat")
+    assert M.process_cached(M.load_fasttext_bin, path) is ft
+
+    write_arpa(_tiny_lm(), path)
+    lm = M.process_cached(M.load_arpa, path)
+    assert isinstance(lm, M.ArpaLM)
+    with pytest.raises(ValueError):  # and the fastText parser the ARPA file
+        M.langid_fn_from_path(path)("the cat")

@@ -45,8 +45,9 @@ def test_no_rdd_usage():
     # probe (dedup._parallelize_input) — it reads planner state, never
     # rows; any other .rdd access is the slow path and fails here
     for rel, src in _sources().items():
-        stripped = src.replace(".rdd.getNumPartitions()", "")
-        assert ".rdd" not in stripped, f".rdd access in {rel}"
+        if rel == "operators/dedup.py":
+            src = src.replace(".rdd.getNumPartitions()", "")
+        assert ".rdd" not in src, f".rdd access in {rel}"
 
 
 def test_collect_only_in_reviewed_modules():
