@@ -37,12 +37,6 @@ def md5_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def md5_hash60_py(s: str | bytes) -> int:
-    """Python parity of :func:`md5_hash60` (driver-side probe math)."""
-    b = s.encode("utf-8") if isinstance(s, str) else s
-    return int(hashlib.md5(b).hexdigest()[:15], 16)
-
-
 def md5_hash60_sql(expr: str) -> str:
     """DuckDB SQL fragment computing :func:`md5_hash60` of ``expr``."""
     return f"(('0x' || SUBSTRING(MD5({expr}), 1, 15))::BIGINT)"

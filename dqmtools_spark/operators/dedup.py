@@ -470,65 +470,76 @@ def connected_components(
     Iterative min-label propagation (the standard large-graph CC on
     Spark): each round every node adopts the minimum label in its
     closed neighborhood; converges in O(diameter) rounds — near-dup
-    clusters are shallow (dozens of docs, diameter ~2-4), so a handful
-    of shuffles on (id) total.  Deterministic: labels are ids, min is
-    order-free.  Each round's frame is localCheckpoint()ed to cut the
-    exponentially growing lineage (iterative algorithms otherwise
-    re-execute every prior round at each action).
+    clusters are shallow (dozens of docs, diameter ~2-4).
+    Deterministic: labels are ids, min is order-free.
 
-    The convergence probe is folded into the round's own frame: the
-    changed flag is projected alongside the new label, so detecting
-    convergence is one tiny scan of the already-materialized checkpoint
-    — no extra join re-reading both label frames per round.
+    The edge list is built ONCE: both orientations plus a self-loop
+    per endpoint (the closed neighborhood), no ``distinct`` — min is
+    idempotent, so duplicated and reversed edges cost rows, not
+    correctness.  It is coalesced to ``defaultParallelism`` partitions
+    and ``localCheckpoint``-ed (1 job): a tiny input frame keeps
+    whatever partitioning it had — a cached LSH pair frame holds
+    ``spark.sql.shuffle.partitions`` partitions however few its rows,
+    and AQE only coalesces shuffle output, not a scan — so without
+    the coalesce every round would run a task per empty partition.
+
+    Round 1 is one aggregate, ``groupBy(src).min(dst)``, with no join
+    (every label starts as its own id).  Each later round is one join
+    of the edges with the previous labels plus one aggregate that
+    yields both the new label (min over the closed neighborhood) and
+    the old one (read from the self-loop row).  The number of changed
+    labels rides the round's own ``localCheckpoint`` as an
+    ``Observation``, so convergence costs no extra job and the
+    checkpoint cuts the lineage.  A round is 2-3 jobs (aggregate
+    shuffle stage, broadcast or join shuffle, result): clusters that
+    are pairs or cliques (diameter 1) finish in 2 rounds, 6 jobs in
+    all, and each further hop of diameter adds one round.
 
     Raises ``RuntimeError`` if labels are still changing after
     ``max_iters`` rounds (a silent partial result would keep multiple
     representatives of one cluster downstream); long chains at corpus
-    scale need a larger ``max_iters`` (rounds scale with the LOG of the
-    worst diameter once doubling is added; here diameter rounds).
+    scale need a larger ``max_iters``.
     """
+    from pyspark.sql import Observation
+
+    a, b = F.col("id_a"), F.col("id_b")
+    # both orientations, then a self-loop per endpoint
+    ends = [(a, b), (b, a), (a, a), (b, b)]
     edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        pairs.select(
+            F.inline(
+                F.array(*[F.struct(s.alias("src"), d.alias("dst")) for s, d in ends])
+            )
         )
-        .distinct()
+        .coalesce(pairs.sparkSession.sparkContext.defaultParallelism)
+        .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    )
-    converged = False
+    # round 1: every label is still its own id, so no join
+    step = edges.withColumn("component", F.col("dst"))
     for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("component").alias("n_comp"))
-        )
-        new_comp = F.least(
-            F.col("component"), F.coalesce(F.col("n_comp"), F.col("component"))
-        )
+        obs = Observation()
         updated = (
-            labels.join(neighbor_min, labels["id"] == neighbor_min["src"], "left")
-            .select(
-                "id",
-                new_comp.alias("component"),
-                (new_comp != F.col("component")).alias("_changed"),
+            step.groupBy("src")
+            .agg(
+                F.min("component").alias("component"),
+                F.max(
+                    F.when(F.col("src") == F.col("dst"), F.col("component"))
+                ).alias("_old"),
+            )
+            .observe(
+                obs,
+                F.count_if(F.col("component") != F.col("_old")).alias("changed"),
             )
             .localCheckpoint(eager=True)
         )
-        changed = updated.filter(F.col("_changed")).limit(1).count()
-        labels = updated.select("id", "component")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds; "
-            "a component's diameter exceeds max_iters — raise max_iters"
-        )
-    return labels
+        labels = updated.select(F.col("src").alias("id"), "component")
+        if obs.get["changed"] == 0:
+            return labels
+        step = edges.join(labels, edges["dst"] == labels["id"])
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iters} rounds; "
+        "a component's diameter exceeds max_iters — raise max_iters"
+    )
 
 
 def drop_duplicate_clusters(
@@ -875,10 +886,13 @@ def remove_duplicated_spans(
     tokens, not all of them.
 
     ``covered`` (the O(dup tokens) hot-position table, small relative
-    to the corpus) feeds three consumers (the dup-doc router's semi and
-    anti sides plus the kept-token anti-join); ``persist_covered``
-    trades memory/disk for recomputing the whole gram->hot pipeline per
-    consumer — same discipline as the LSH signature tables.  The gram
+    to the corpus) feeds three consumers in the default mode (the
+    dup-doc router's semi and anti sides plus the kept-token
+    anti-join); ``persist_covered`` trades memory/disk for recomputing
+    the whole gram->hot pipeline per consumer — same discipline as the
+    LSH signature tables.  In maximal mode the router keys on the
+    removed positions instead, so a doc whose covered runs are all
+    shorter than ``min_span_chars`` skips the rebuild.  The gram
     table itself feeds two consumers (the hot-gram count and the
     covered-position join); ``persist_grams`` avoids tokenizing+hashing
     the corpus twice for them, at the cost of caching an
@@ -937,11 +951,6 @@ def remove_duplicated_spans(
         covered = covered.persist(StorageLevel.MEMORY_AND_DISK)
         helpers.append(covered)
 
-    dup_ids = covered.select(id_col).distinct()
-    dup_docs = base.join(dup_ids, id_col, "semi")
-    clean_docs = base.join(dup_ids, id_col, "anti")
-
-    toks = dup_docs.select(F.col(id_col), F.posexplode("ws").alias("p", "tok"))
     if min_span_chars > 0:
         # gaps-and-islands: adjacent covered positions share
         # p - row_number(); each island is one maximal span.  The
@@ -950,19 +959,22 @@ def remove_duplicated_spans(
         # single pathological doc, which AQE handles.
         from pyspark.sql import Window
 
-        # toks feeds two consumers in maximal-span mode (the island
-        # char-length computation and the kept anti-join); persist so
-        # the dup-doc semi-join + token explode runs once
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
-        helpers.append(toks)
-        # ONE pass over the covered tokens: island id via the
-        # gaps-and-islands window, per-island rejoined char length via
-        # a second window over (id, grp), filter, done — no separate
-        # groupBy + semi-join re-derivation of the islands frame
+        # ONE pass over the covered positions: the token is read from
+        # the doc's word array (no explode of a doc that may keep every
+        # token), island id via the gaps-and-islands window, per-island
+        # rejoined char length via a second window over (id, grp),
+        # filter, done.  removed feeds three consumers (the router's
+        # semi and anti sides and the kept anti-join); persist so the
+        # windows run once
         w_isl = Window.partitionBy(id_col).orderBy("p")
         w_grp = Window.partitionBy(id_col, "grp")
         removed = (
-            covered.join(toks, [id_col, "p"])
+            covered.join(base, id_col)
+            .select(
+                F.col(id_col),
+                "p",
+                F.element_at("ws", F.col("p") + 1).alias("tok"),
+            )
             .withColumn("grp", F.col("p") - F.row_number().over(w_isl))
             .withColumn(
                 "chars",
@@ -972,9 +984,20 @@ def remove_duplicated_spans(
             )
             .filter(F.col("chars") >= min_span_chars)
             .select(id_col, "p")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
+        helpers.append(removed)
     else:
         removed = covered
+
+    # only docs that lose a token go through the token rebuild; in
+    # maximal mode a doc whose covered runs are all under
+    # min_span_chars is a clean doc
+    dup_ids = removed.select(id_col).distinct()
+    dup_docs = base.join(dup_ids, id_col, "semi")
+    clean_docs = base.join(dup_ids, id_col, "anti")
+
+    toks = dup_docs.select(F.col(id_col), F.posexplode("ws").alias("p", "tok"))
     kept = toks.join(removed, [id_col, "p"], "anti")
     rebuilt = kept.groupBy(id_col).agg(
         F.concat_ws(

@@ -29,17 +29,3 @@ def group_mode(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
         .drop("_rn", "_cnt")
     )
 
-
-def flag_minority_rows(
-    df: DataFrame, keys: list[str], value_col: str
-) -> DataFrame:
-    """J4: join the per-group mode back and flag rows disagreeing with
-    the majority (the reference's offender diagnostics, R11)."""
-    mode_df = group_mode(df, keys, value_col).withColumnRenamed(
-        value_col, "_modal"
-    )
-    return (
-        df.join(mode_df, on=keys, how="left")
-        .withColumn("is_minority", F.col(value_col) != F.col("_modal"))
-        .drop("_modal")
-    )

@@ -78,6 +78,29 @@ def test_maximal_span_char_threshold_is_exact(spark):
     assert g15 == {0: 0, 1: 0}
 
 
+def test_maximal_span_covered_doc_without_long_island_passes_through(spark):
+    """A doc whose only covered run is under min_span_chars loses no
+    token: n_removed = 0 and clean_text is its single-space rejoin,
+    the same row the token rebuild gave it."""
+    rows = [
+        (0, f"{SHORT}  unique0\tfiller0 morefiller0 "),
+        (1, f"{SHORT} unique1 filler1\nmorefiller1"),
+        (2, "totally unrelated content with nothing shared at all here"),
+    ]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    out = remove_duplicated_spans(
+        df, "text", "doc_id", n=5, min_docs=2, min_span_chars=50, eager=True
+    )
+    got = {r["doc_id"]: r for r in out.collect()}
+    out.unpersist()
+    assert set(got) == {0, 1, 2}
+    for d, text in rows:
+        assert got[d]["n_removed"] == 0
+        assert got[d]["removed_fraction"] == 0.0
+        assert got[d]["n_tokens"] == len(text.split())
+        assert got[d]["clean_text"] == " ".join(text.split())
+
+
 def test_maximal_span_merges_overlapping_grams_into_one_island(spark):
     """Adjacent/overlapping hot-gram positions form ONE maximal span:
     each individual 5-gram of the boilerplate is well under the
