@@ -886,13 +886,10 @@ def remove_duplicated_spans(
     tokens, not all of them.
 
     ``covered`` (the O(dup tokens) hot-position table, small relative
-    to the corpus) feeds three consumers in the default mode (the
-    dup-doc router's semi and anti sides plus the kept-token
-    anti-join); ``persist_covered`` trades memory/disk for recomputing
-    the whole gram->hot pipeline per consumer — same discipline as the
-    LSH signature tables.  In maximal mode the router keys on the
-    removed positions instead, so a doc whose covered runs are all
-    shorter than ``min_span_chars`` skips the rebuild.  The gram
+    to the corpus) feeds three consumers (the dup-doc router's semi and
+    anti sides plus the kept-token anti-join); ``persist_covered``
+    trades memory/disk for recomputing the whole gram->hot pipeline per
+    consumer — same discipline as the LSH signature tables.  The gram
     table itself feeds two consumers (the hot-gram count and the
     covered-position join); ``persist_grams`` avoids tokenizing+hashing
     the corpus twice for them, at the cost of caching an
@@ -951,6 +948,11 @@ def remove_duplicated_spans(
         covered = covered.persist(StorageLevel.MEMORY_AND_DISK)
         helpers.append(covered)
 
+    dup_ids = covered.select(id_col).distinct()
+    dup_docs = base.join(dup_ids, id_col, "semi")
+    clean_docs = base.join(dup_ids, id_col, "anti")
+
+    toks = dup_docs.select(F.col(id_col), F.posexplode("ws").alias("p", "tok"))
     if min_span_chars > 0:
         # gaps-and-islands: adjacent covered positions share
         # p - row_number(); each island is one maximal span.  The
@@ -959,22 +961,19 @@ def remove_duplicated_spans(
         # single pathological doc, which AQE handles.
         from pyspark.sql import Window
 
-        # ONE pass over the covered positions: the token is read from
-        # the doc's word array (no explode of a doc that may keep every
-        # token), island id via the gaps-and-islands window, per-island
-        # rejoined char length via a second window over (id, grp),
-        # filter, done.  removed feeds three consumers (the router's
-        # semi and anti sides and the kept anti-join); persist so the
-        # windows run once
+        # toks feeds two consumers in maximal-span mode (the island
+        # char-length computation and the kept anti-join); persist so
+        # the dup-doc semi-join + token explode runs once
+        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
+        helpers.append(toks)
+        # ONE pass over the covered tokens: island id via the
+        # gaps-and-islands window, per-island rejoined char length via
+        # a second window over (id, grp), filter, done — no separate
+        # groupBy + semi-join re-derivation of the islands frame
         w_isl = Window.partitionBy(id_col).orderBy("p")
         w_grp = Window.partitionBy(id_col, "grp")
         removed = (
-            covered.join(base, id_col)
-            .select(
-                F.col(id_col),
-                "p",
-                F.element_at("ws", F.col("p") + 1).alias("tok"),
-            )
+            covered.join(toks, [id_col, "p"])
             .withColumn("grp", F.col("p") - F.row_number().over(w_isl))
             .withColumn(
                 "chars",
@@ -984,20 +983,9 @@ def remove_duplicated_spans(
             )
             .filter(F.col("chars") >= min_span_chars)
             .select(id_col, "p")
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        helpers.append(removed)
     else:
         removed = covered
-
-    # only docs that lose a token go through the token rebuild; in
-    # maximal mode a doc whose covered runs are all under
-    # min_span_chars is a clean doc
-    dup_ids = removed.select(id_col).distinct()
-    dup_docs = base.join(dup_ids, id_col, "semi")
-    clean_docs = base.join(dup_ids, id_col, "anti")
-
-    toks = dup_docs.select(F.col(id_col), F.posexplode("ws").alias("p", "tok"))
     kept = toks.join(removed, [id_col, "p"], "anti")
     rebuilt = kept.groupBy(id_col).agg(
         F.concat_ws(

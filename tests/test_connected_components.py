@@ -4,6 +4,7 @@ the cost and fail-loud contracts of :func:`connected_components`."""
 from __future__ import annotations
 
 import random
+import threading
 
 import pytest
 from hypothesis import given, settings
@@ -116,3 +117,24 @@ def test_non_convergence_raises(spark):
         connected_components(pairs, max_iters=2)
     got = {r["id"]: r["component"] for r in connected_components(pairs, max_iters=8).collect()}
     assert got == {i: 1 for i in range(1, 9)}
+
+
+def test_empty_pairs_return_empty_labels(spark):
+    """A corpus with no LSH candidates: the changed-label Observation
+    must still be filled by the round's checkpoint, so the call returns
+    an empty labelling instead of waiting on it, and every doc is
+    kept.  The call runs on a worker thread so a hang fails the test."""
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    result = {}
+    worker = threading.Thread(
+        target=lambda: result.update(labels=connected_components(pairs)),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "connected_components blocked on empty pairs"
+    assert result["labels"].count() == 0
+
+    docs = spark.createDataFrame([(i,) for i in range(5)], "id long")
+    kept = {r["id"] for r in drop_duplicate_clusters(docs, pairs, "id").collect()}
+    assert kept == set(range(5))
