@@ -22,7 +22,7 @@ checkpoint is durable (resume re-reads it instead of re-extracting),
 and each phase runs as a pure stage.  A pure Python stage and a pure
 codegen stage each scale near-linearly with cores; the fused stage
 interleaves both per task and is more sensitive to batch pipelining
-(see bench.py), so the staged form is also what the scaling benchmark
+(see perfbench), so the staged form is also what the scaling benchmark
 exercises.
 
 Rule metrics are a separate aggregation over the (cheap,
@@ -44,6 +44,7 @@ from dqmtools_spark.functions.udfs import (
 )
 from dqmtools_spark.rules.builtin import default_registry, join_lang_thresholds
 from dqmtools_spark.rules.core import RuleBuildOutcome, RuleRegistry, evaluate_rules
+from dqmtools_spark.sources.tables import read_table, table_exists
 
 DEFAULT_PART_BUCKETS = 64
 
@@ -148,19 +149,10 @@ def run_pipeline(
     return _fold_results(enriched, registry)
 
 
-def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API, so it works
-    on any supported store (local, HDFS, s3a), not just the local FS."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def staged_checkpoint_complete(spark: SparkSession, checkpoint_path: str) -> bool:
     """True when the phase-1 text checkpoint finished writing (Spark's
     ``_SUCCESS`` commit marker exists)."""
-    return _hadoop_path_exists(spark, checkpoint_path.rstrip("/") + "/_SUCCESS")
+    return table_exists(spark, checkpoint_path.rstrip("/") + "/_SUCCESS")
 
 
 def run_pipeline_staged(
@@ -187,11 +179,12 @@ def run_pipeline_staged(
     changed and the checkpoint must be rebuilt despite being complete.
     """
     registry = registry or default_registry()
+    phase1 = python_phase(pages, reextract=reextract, models=models)
     if force or not staged_checkpoint_complete(spark, checkpoint_path):
-        python_phase(
-            pages, reextract=reextract, models=models
-        ).write.mode("overwrite").parquet(checkpoint_path)
-    processed = spark.read.parquet(checkpoint_path)
+        phase1.write.mode("overwrite").parquet(checkpoint_path)
+    # the checkpoint is phase 1's output, so its schema is known here:
+    # reading with it spares the footer-inference job on every submit
+    processed = read_table(spark, checkpoint_path, phase1.schema)
     enriched = jvm_phase(processed, spark, n_buckets=n_buckets)
     return _fold_results(enriched, registry)
 

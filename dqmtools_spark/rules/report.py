@@ -27,12 +27,14 @@ import datetime as dt
 import operator as _op
 from collections.abc import Callable
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dqmtools_spark.operators.latest import latest_per_key
 from dqmtools_spark.rules.core import QualityRule
-from dqmtools_spark.schemas import BAD, INVALID, OK, WARNING
+from dqmtools_spark.schemas import BAD, INVALID, OK, RULE_RESULTS_SCHEMA, WARNING
+from dqmtools_spark.sources.tables import read_table
 
 # ------------------------------------------------------------------ R10
 
@@ -122,8 +124,10 @@ class ResultsHistory:
     def append(self, rows: list[dict], now: dt.datetime | None = None) -> None:
         now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         rows = [{**r, "last_update": r.get("last_update", now)} for r in rows]
+        # from pandas, so the rows cross over Arrow instead of being
+        # pickled and decoded by a Python worker job
         df = self.spark.createDataFrame(
-            rows, "name string, status int, message string, last_update timestamp"
+            pd.DataFrame(rows, columns=RESULT_COLS), RULE_RESULTS_SCHEMA
         )
         if self.path:
             df.write.mode("append").parquet(self.path)
@@ -132,11 +136,9 @@ class ResultsHistory:
 
     def all(self) -> DataFrame:
         if self.path:
-            return self.spark.read.parquet(self.path)
+            return read_table(self.spark, self.path, RULE_RESULTS_SCHEMA)
         if self._mem is None:
-            return self.spark.createDataFrame(
-                [], "name string, status int, message string, last_update timestamp"
-            )
+            return self.spark.createDataFrame([], RULE_RESULTS_SCHEMA)
         return self._mem
 
     def latest(self) -> DataFrame:

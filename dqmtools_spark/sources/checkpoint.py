@@ -24,9 +24,11 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from dqmtools_spark.schemas import DOC_RESULTS_SCHEMA, PROGRESS_SCHEMA
 from dqmtools_spark.sources.tables import read_table, table_exists, write_table
 
 
@@ -50,7 +52,7 @@ class CheckpointedRun:
         if not table_exists(self.spark, self.progress_path):
             return set()
         rows = (
-            read_table(self.spark, self.progress_path)
+            read_table(self.spark, self.progress_path, PROGRESS_SCHEMA)
             .filter(F.col("status") == "done")
             .select("part_key")
             .distinct()
@@ -63,7 +65,7 @@ class CheckpointedRun:
         if not table_exists(self.spark, self.results_path):
             return None
         return (
-            read_table(self.spark, self.results_path)
+            read_table(self.spark, self.results_path, DOC_RESULTS_SCHEMA)
             .filter(F.col("part_key").isin(buckets))
             .select("url", "part_key")
         )
@@ -99,8 +101,6 @@ class CheckpointedRun:
         # shared with accumulators: a re-executed task counts twice —
         # counters are lineage diagnostics, not the resume gate (the
         # gate is the anti-join + progress table).
-        from pyspark.sql import Observation
-
         obs = Observation()
         work = work.observe(
             obs,
@@ -122,7 +122,7 @@ class CheckpointedRun:
         per_bucket: dict[int, tuple[int, int]] = {}
         if table_exists(self.spark, self.results_path):
             stat_rows = (
-                read_table(self.spark, self.results_path)
+                read_table(self.spark, self.results_path, DOC_RESULTS_SCHEMA)
                 .filter(F.col("part_key").isin(pending))
                 .groupBy("part_key")
                 .agg(
@@ -138,26 +138,23 @@ class CheckpointedRun:
 
         # mark progress AFTER data is durable (write-ahead ordering:
         # a kill between the two writes re-runs the bucket; the
-        # anti-join makes that re-run a no-op — idempotence, not loss)
-        now = _now()
-        prog_rows = [
+        # anti-join makes that re-run a no-op — idempotence, not loss).
+        # Built from pandas so the rows cross over Arrow: a list of
+        # dicts would be pickled and decoded by a Python worker job.
+        prog = pd.DataFrame(
             {
-                "part_key": int(b),
+                "part_key": pending,
                 "status": "done",
-                "docs_in": int(per_bucket.get(b, (0, 0))[0]),
-                "docs_out": int(per_bucket.get(b, (0, 0))[1]),
+                "docs_in": [per_bucket.get(b, (0, 0))[0] for b in pending],
+                "docs_out": [per_bucket.get(b, (0, 0))[1] for b in pending],
                 # lineage: which run completed this bucket — a resumed
                 # job's buckets carry the resuming run's id
                 "run_id": self.run_id,
-                "updated": now,
+                "updated": _now(),
             }
-            for b in pending
-        ]
-        from dqmtools_spark.schemas import PROGRESS_SCHEMA
-
+        )
         write_table(
-            self.spark.createDataFrame(prog_rows, PROGRESS_SCHEMA),
-            self.progress_path,
+            self.spark.createDataFrame(prog, PROGRESS_SCHEMA), self.progress_path
         )
         return {
             "buckets_done": len(done) + len(pending),

@@ -12,6 +12,7 @@ Iceberg: snapshot commit).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def write_table(
@@ -35,16 +36,30 @@ def write_table(
     w.parquet(path)
 
 
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_table(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
+    """Read a table; pass ``schema`` for a table this program wrote.
+
+    Without a schema, Spark runs a job that reads parquet footers to
+    infer one.  With it, the read plans on the driver alone.  The schema
+    must match what was written: a column it names that the files lack
+    reads back as NULL rather than failing.
+    """
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    return reader.parquet(path)
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:  # noqa: BLE001 — AnalysisException: path not found
-        return False
+    """True once anything was written at ``path``: a Hadoop FileSystem
+    ``exists`` call, so it works on any supported store (local, HDFS,
+    s3a) and runs no Spark job.  A table whose every append was empty
+    holds only ``_SUCCESS`` and counts as existing; read with its
+    schema, it is an empty frame."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    return bool(fs.exists(hpath))
 
 
 def compact_table(

@@ -151,11 +151,12 @@ def main() -> None:
     # (reasons array -> per-rule fail counts) — never a second run of
     # the fused Python phase over the raw input
     if not summary.get("skipped"):
+        from dqmtools_spark.schemas import DOC_RESULTS_SCHEMA
         from dqmtools_spark.sources.tables import read_table
 
         applied = [o.rule.name for o in outcomes if o.column is not None]
         metrics = rule_metrics_from_results(
-            read_table(spark, ckpt.results_path), applied
+            read_table(spark, ckpt.results_path, DOC_RESULTS_SCHEMA), applied
         )
         write_table(metrics, os.path.join(args.output, "rule_metrics"))
         if args.metrics_png:
