@@ -20,10 +20,11 @@ CRC-8 (frame header) and CRC-16 (frame) bytes are consumed and
 VERIFIED — a corrupt frame is a ValueError, not garbage samples.
 
 The fixture encoder emits CONSTANT / VERBATIM / FIXED(0-2) subframes
-with real Rice coding and optional left/side / mid/side
-decorrelation, so decoder tests get sample-exact round trips against
-numpy integers; the LPC path is tested against a hand-built bitstream
-whose recurrence is recomputed independently in the test.
+with real Rice coding (4-bit parameters, 5-bit past 14) and optional
+left/side / mid/side decorrelation, so decoder tests get sample-exact
+round trips against numpy integers; the LPC path is tested against a
+hand-built bitstream whose recurrence is recomputed independently in
+the test.
 
 Semantics analog: the reference decodes opaque per-row payloads with
 external unpackers (``dump_pds_ana_info.py:125-163``).
@@ -378,11 +379,14 @@ def _rice_encode(w: _MSBWriter, resid: list[int], param: int) -> None:
 
 
 def _best_rice_param(resid: list[int]) -> int:
+    """Rice parameter near log2 of the mean residual magnitude, capped
+    at 30 (the 5-bit method's largest non-escape parameter).  A cap of
+    14 would turn 32-bit residuals into unary runs of ~2^18 bits."""
     if not resid:
         return 0
     mean = sum(abs(v) for v in resid) / len(resid) + 1
     p = max(0, int(mean).bit_length() - 1)
-    return min(p, 14)
+    return min(p, 30)
 
 
 def _encode_subframe(
@@ -417,9 +421,12 @@ def _encode_subframe(
         for i in range(order, len(x))
     ]
     param = _best_rice_param(resid)
-    w.write(0, 2)   # 4-bit rice
+    # method 0 (4-bit parameters, 15 = escape) whenever it can hold the
+    # parameter, so such streams keep their bytes; method 1 (5-bit) past it
+    method = 0 if param <= 14 else 1
+    w.write(method, 2)
     w.write(0, 4)   # partition order 0
-    w.write(param, 4)
+    w.write(param, 4 + method)
     _rice_encode(w, resid, param)
 
 

@@ -113,12 +113,13 @@ def portable_shingle_hashes(text: F.Column, n: int, strict: bool = False) -> F.C
     )
 
 
-def jaccard(a: F.Column, b: F.Column) -> F.Column:
-    """Exact Jaccard over two arrays (distinct semantics)."""
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union == 0, F.lit(0.0)).otherwise(
-        inter.cast("double") / union
+def jaccard(a: str, b: str) -> str:
+    """Exact Jaccard over two array columns (distinct semantics), as
+    the SQL text of an expression over the columns named ``a`` and ``b``."""
+    union = f"size(array_union({a}, {b}))"
+    return (
+        f"CASE WHEN {union} = 0 THEN 0.0D "
+        f"ELSE CAST(size(array_intersect({a}, {b})) AS DOUBLE) / {union} END"
     )
 
 
@@ -141,11 +142,9 @@ def ngram_jaccard_pairs(
         F.col(id_col).alias("id_b"), word_shingles(F.col(text_col), n).alias("sh_b")
     )
     pairs = s.join(t, F.col("id_a") < F.col("id_b"))
-    return (
-        pairs.withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return pairs.selectExpr(
+        "id_a", "id_b", f"{jaccard('sh_a', 'sh_b')} AS jaccard"
+    ).filter(f"jaccard >= {float(threshold)!r}D")
 
 
 # ---------------------------------------------------------- MinHash LSH
@@ -189,29 +188,25 @@ def minhash_signatures(
     min is null and the signature folds to null; without the guard,
     ``xxhash64(null, seed)`` hashes the seed alone and all degenerate
     docs share one constant signature, flooding a single LSH bucket).
-    ``seed_hash(col, i) -> Column`` swaps the family (the md5 tier
+    ``seed_hash(s, i) -> str`` swaps the family: it returns the SQL text
+    of seed ``i``'s hash of the shingle expression ``s`` (the md5 tier
     passes Carter–Wegman arithmetic over pre-hashed shingles).
     The 32 mins run as ONE whole-stage-codegen hash aggregate instead
-    of 32 interpreted array passes.  Scale shape: a doc's shingles sit
-    in one input row, so map-side partial aggregation collapses back to
-    one row per doc before the exchange — the shuffle is O(docs), not
-    O(shingles)."""
-    fam = seed_hash or (lambda c, i: F.xxhash64(c, F.lit(i)))
-    ex = shingled.select(F.col(id_col), F.explode_outer(sh_col).alias("_s"))
+    of 32 interpreted array passes, and the aggregate goes in as one
+    SQL expression: built from Column calls it costs a few Py4J round
+    trips per min.  Scale shape: a doc's shingles sit in one input row,
+    so map-side partial aggregation collapses back to one row per doc
+    before the exchange — the shuffle is O(docs), not O(shingles)."""
+    fam = seed_hash or (lambda s, i: f"xxhash64({s}, {i})")
     mins = [
-        F.min(F.when(F.col("_s").isNotNull(), fam(F.col("_s"), i))).alias(f"_h{i}")
+        f"min(CASE WHEN _s IS NOT NULL THEN {fam('_s', i)} END)"
         for i in range(num_hashes)
     ]
+    sig = f"CASE WHEN {mins[0]} IS NOT NULL THEN array({', '.join(mins)}) END"
     return (
-        ex.groupBy(id_col)
-        .agg(*mins)
-        .select(
-            F.col(id_col),
-            F.when(
-                F.col("_h0").isNotNull(),
-                F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]),
-            ).alias("_sig"),
-        )
+        shingled.selectExpr(f"`{id_col}`", f"explode_outer(`{sh_col}`) AS _s")
+        .groupBy(id_col)
+        .agg(F.expr(sig).alias("_sig"))
     )
 
 
@@ -272,53 +267,37 @@ def _lsh_band_verify(
     ``xxhash64(slice)`` (compact shuffle key, Spark-only);
     ``False`` joins on the raw slice (array equi-join — exactly "some
     band agrees", reproducible in oracle SQL).  Both are equi-joins:
-    never cartesian, AQE splits hot buckets.
+    never cartesian, AQE splits hot buckets.  Band structs, join
+    condition and Jaccard are SQL text, one Py4J call each.
     """
     rows_per_band = num_hashes // bands
+    vals = [
+        f"slice(_sig, {b * rows_per_band + 1}, {rows_per_band})" for b in range(bands)
+    ]
+    if hash_buckets:
+        vals = [f"xxhash64({v})" for v in vals]
+    structs = ", ".join(
+        f"named_struct('band', {b}, 'val', {v})" for b, v in enumerate(vals)
+    )
+    banded = sigs.selectExpr("_id", f"inline(array({structs}))")
 
-    def bucket(b: int) -> F.Column:
-        sl = F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band)
-        return F.xxhash64(sl) if hash_buckets else sl
-
-    banded = sigs.select(
-        "_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), bucket(b).alias("val"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_b"),
-    ).select("_id", "_b.band", "_b.val")
-
-    l, r = banded.alias("l"), banded.alias("r")
     cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l._id") < F.col("r._id")),
+        banded.alias("l")
+        .join(
+            banded.alias("r"),
+            F.expr("l.band = r.band AND l.val = r.val AND l._id < r._id"),
         )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
+        .selectExpr("l._id AS id_a", "r._id AS id_b")
         .distinct()
     )
 
-    sh = base.select("_id", "_sh")
     return (
-        cand.join(
-            sh.withColumnRenamed("_id", "id_a").withColumnRenamed("_sh", "sh_a"),
-            "id_a",
-        )
-        .join(
-            sh.withColumnRenamed("_id", "id_b").withColumnRenamed("_sh", "sh_b"),
-            "id_b",
-        )
-        .withColumn("jaccard", jaccard(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
+        cand.join(base.selectExpr("_id AS id_a", "_sh AS sh_a"), "id_a")
+        .join(base.selectExpr("_id AS id_b", "_sh AS sh_b"), "id_b")
         # raw, not rounded: one exact int/int division is bit-identical
         # in every engine, so an oracle needs no rounding fuzz
-        .select("id_a", "id_b", "jaccard")
+        .selectExpr("id_a", "id_b", f"{jaccard('sh_a', 'sh_b')} AS jaccard")
+        .filter(f"jaccard >= {float(threshold)!r}D")
     )
 
 
@@ -384,7 +363,7 @@ def minhash_lsh_pairs(
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
         helpers.append(base)
     sigs = minhash_signatures(base, "_id", "_sh", num_hashes).filter(
-        F.col("_sig").isNotNull()
+        "_sig IS NOT NULL"
     ).persist(StorageLevel.MEMORY_AND_DISK)
     helpers.append(sigs)
     out = _lsh_band_verify(
@@ -439,9 +418,9 @@ def minhash_lsh_pairs_md5(
     base = df.select(F.col(id_col).alias("_id"), sh.alias("_sh")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    cw = lambda c, i: (F.lit(consts[i][0]) * c + F.lit(consts[i][1])) % P31  # noqa: E731
+    cw = lambda s, i: f"({consts[i][0]} * {s} + {consts[i][1]}) % {P31}"  # noqa: E731
     sigs = minhash_signatures(base, "_id", "_sh", num_hashes, seed_hash=cw).filter(
-        F.col("_sig").isNotNull()
+        "_sig IS NOT NULL"
     ).persist(StorageLevel.MEMORY_AND_DISK)
     out = _lsh_band_verify(
         base, sigs, num_hashes, bands, threshold, hash_buckets=False
@@ -478,7 +457,8 @@ def connected_components(
     idempotent, so duplicated and reversed edges cost rows, not
     correctness.  It is coalesced to ``defaultParallelism`` partitions
     and ``localCheckpoint``-ed (1 job): a tiny input frame keeps
-    whatever partitioning it had — a cached LSH pair frame holds
+    whatever partitioning it had — a pair frame cached without
+    ``get_spark``'s cached-plan coalescing holds
     ``spark.sql.shuffle.partitions`` partitions however few its rows,
     and AQE only coalesces shuffle output, not a scan — so without
     the coalesce every round would run a task per empty partition.

@@ -8,6 +8,20 @@ One place to pin the configs that matter at 100 TB:
   reference's per-row ``df.apply`` lambdas are banned here).
 - ``spark.sql.shuffle.partitions`` sized for the local harness; on a
   real cluster AQE coalesces from a deliberately-high initial number.
+- AQE may change the output partitioning of a cached plan
+  (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``), so
+  it coalesces the shuffles inside a persisted frame too: the eager LSH
+  pair cache holds one partition, not ``spark.sql.shuffle.partitions``
+  mostly empty ones that every later scan runs a task for.
+- No Python call-site capture per Column call
+  (``spark.python.sql.dataFrameDebugging.enabled=false``).  With it on,
+  PySpark 4 walks the Python stack and sends it over Py4J on every
+  Column call (about 5 extra round trips each), which made building one
+  MinHash plan cost thousands of round trips.  The trade: a runtime
+  error (say an ANSI overflow inside a task) no longer names the Python
+  line that built the failing expression.  Analysis errors (a missing
+  column, a type mismatch) still raise at the call site in classic
+  mode, and nothing in this package reads the query context.
 """
 
 from __future__ import annotations
@@ -44,6 +58,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")

@@ -57,22 +57,23 @@ def test_simhash_eager_leaves_no_helper_caches(spark, sf_dir, clean_cache):
 
 
 def test_eager_and_lazy_agree(spark, sf_dir, clean_cache):
-    """eager only changes caching, never the emitted pairs."""
-    from dqmtools_spark.operators.dedup import minhash_lsh_pairs_md5
+    """eager only changes caching, never the emitted pairs — for both
+    MinHash tiers."""
+    from dqmtools_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_md5,
+    )
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    eager = {
-        tuple(r)
-        for r in minhash_lsh_pairs_md5(
-            d, "text", "doc_id", threshold=0.5, eager=True
-        ).collect()
-    }
-    spark.catalog.clearCache()
-    lazy = {
-        tuple(r)
-        for r in minhash_lsh_pairs_md5(
-            d, "text", "doc_id", threshold=0.5, eager=False
-        ).collect()
-    }
-    assert eager == lazy
-
+    for tier in (minhash_lsh_pairs_md5, minhash_lsh_pairs):
+        eager = {
+            tuple(r)
+            for r in tier(d, "text", "doc_id", threshold=0.5, eager=True).collect()
+        }
+        spark.catalog.clearCache()
+        lazy = {
+            tuple(r)
+            for r in tier(d, "text", "doc_id", threshold=0.5, eager=False).collect()
+        }
+        spark.catalog.clearCache()
+        assert eager == lazy, tier.__name__

@@ -135,6 +135,32 @@ def test_malformed_gifs_raise_cleanly():
         decode_gif(bytes(bad[: len(bad) - 4]) + bytes([0, 0x3B]))
 
 
+def test_second_frame_over_pixel_budget_is_never_read():
+    """The decoder returns at the first image descriptor, so the
+    per-frame ``MAX_PIXELS`` check bounds the whole decode: a second
+    frame claiming more than the budget is never reached."""
+    import struct
+
+    from dqmtools_spark.functions.gifcodec import MAX_PIXELS
+
+    ind = [0, 1, 2, 3] * 4
+    one = encode_gif(4, 4, PAL4, ind)
+    assert one[-1] == 0x3B
+    side = 0xFFFF
+    assert side * side > MAX_PIXELS
+    second = (
+        bytes([0x2C]) + struct.pack("<HHHH", 0, 0, side, side) + bytes([0x00])
+        + bytes([2, 1, 0x00, 0])     # min code size, one junk sub-block
+    )
+    w, h, c, pix = decode_gif(one[:-1] + second + bytes([0x3B]))
+    assert (w, h, c) == (4, 4, 3)
+    want = np.array(PAL4, np.uint8)[np.array(ind).reshape(4, 4)]
+    assert np.array_equal(np.frombuffer(pix, np.uint8).reshape(4, 4, 3), want)
+    # the same descriptor as the first frame is refused by the budget
+    with pytest.raises(ValueError, match="pixel budget"):
+        decode_gif(one[:13 + 12] + second + bytes([0x3B]))
+
+
 def test_multimodal_guard_decodes_gif_payloads(spark):
     """stub=False feature extraction yields REAL features for GIF
     payloads now — same layout as PNG/JPEG — and still degrades
