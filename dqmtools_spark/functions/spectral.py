@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -76,8 +76,3 @@ def synth_tone(freq: Column, n: int, second_freq: int, second_amp: float) -> Col
         lambda i: F.cos(two_pi_over_n * freq * i)
         + F.lit(second_amp) * F.cos(two_pi_over_n * F.lit(second_freq) * i),
     )
-
-
-def power_spectrum(df: DataFrame, arr_col: str, out_col: str = "power_spectrum") -> DataFrame:
-    """Attach the one-sided power spectrum of ``arr_col``."""
-    return df.withColumn(out_col, power_spectrum_udf(F.col(arr_col).cast("array<double>")))

@@ -1043,16 +1043,19 @@ def global_line_dedup(
     ``n_kept=0`` (C4 then drops such docs via the length rule).  Lines
     shorter than ``min_chars`` are exempt (always kept): the default 1
     exempts only empty lines, so blank-line structure survives.
-    NULL-text docs also return ('', 0).
+    NULL-text docs also return ('', 0).  Rows that share an id are one
+    document, returned once (as ``oracles.global_line_dedup_sql``'s
+    ``GROUP BY doc_id`` does).
 
     Scale shape — the canonical global span-dedup plan, all rows
-    O(corpus lines), no all-pairs anything:
+    O(corpus lines), no all-pairs anything, no join:
       1. posexplode lines, key = md5(line) (narrow 32-byte shuffle key
          instead of the raw line; md5 keeps the oracle portable),
-      2. winner per key = ``min(struct(id, idx))`` — ONE hash aggregate
-         with map-side partial combine,
-      3. broadcast-free equi-join lines->winners on the hash,
-      4. one groupBy(id) to reassemble (sorted by line index).
+      2. winner per key = ``min(struct(id, idx, line))`` — ONE
+         aggregate with map-side partial combine; the winner carries
+         its line, so nothing joins back to it,
+      3. one groupBy(id) over winners, short lines and per-doc stubs
+         reassembles each doc (sorted by line index).
     Deterministic across runs and cluster sizes: winners are pure mins.
     """
     out, _winners = global_line_dedup_frames(df, text_col, id_col, min_chars)
@@ -1070,33 +1073,35 @@ def global_line_dedup_frames(
     returns ``(out, winners)`` where ``out`` is the
     (id, deduped_text, n_kept) result and ``winners`` the one-row-per-
     newly-kept-line-hash frame (column ``_h``) — the increment a
-    streaming ledger appends.
+    streaming ledger appends; ``out`` regroups its ``_w`` lines.
 
     ``seen_hashes`` (a frame with column ``_h``) excludes lines the
     corpus has ALREADY kept (prior micro-batches): they get no winner
-    row and are dropped by the same null filter that drops
-    within-corpus later occurrences.  ``None`` (the batch form) means
-    nothing is pre-seen.  Keeping one definition is what makes the
+    row, so they are dropped like within-corpus later occurrences.
+    ``None`` (the batch form) means nothing is pre-seen.  Keeping one definition is what makes the
     streaming twin (:func:`~dqmtools_spark.streaming.stream.
     stream_global_line_dedup`) EQUAL to the batch operator by
     construction, not by parallel maintenance of two copies.
     """
     df = _parallelize_input(df)
+    # a NULL-line stub leads every document (posexplode_outer makes one
+    # for a NULL text), so a document that keeps no line still regroups
+    lines = F.concat(
+        F.array(F.lit(None).cast("string")), F.split(F.col(text_col), r"\n")
+    )
     ex = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode(F.split(F.col(text_col), r"\n")).alias("_idx", "_line"),
-    ).withColumn("_h", F.md5(F.col("_line")))
-    fresh = ex.filter(F.length("_line") >= min_chars)
+        F.col(id_col).alias("_id"), F.posexplode_outer(lines).alias("_idx", "_line")
+    )
+    fresh = ex.filter(F.length("_line") >= min_chars).withColumn("_h", F.md5("_line"))
     if seen_hashes is not None:
         fresh = fresh.join(seen_hashes.select("_h"), "_h", "anti")
     winners = fresh.groupBy("_h").agg(
-        F.min(F.struct("_id", "_idx")).alias("_w")
+        F.min(F.struct("_id", "_idx", "_line")).alias("_w")
     )
-    kept = ex.join(winners, "_h", "left").filter(
-        (F.length("_line") < min_chars)
-        | ((F.col("_w._id") == F.col("_id")) & (F.col("_w._idx") == F.col("_idx")))
-    )
-    docs = kept.groupBy("_id").agg(
+    exempt = F.col("_line").isNull() | (F.length("_line") < min_chars)
+    kept = ex.filter(exempt).unionByName(winners.select("_w.*"))
+    # array_join and count both skip the stub's NULL line
+    out = kept.groupBy("_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("_idx", "_line"))),
@@ -1104,17 +1109,8 @@ def global_line_dedup_frames(
             ),
             "\n",
         ).alias("deduped_text"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    out = (
-        df.select(F.col(id_col).alias("_id"))
-        .join(docs, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            F.coalesce("deduped_text", F.lit("")).alias("deduped_text"),
-            F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-        )
-    )
+        F.count("_line").alias("n_kept"),
+    ).withColumnRenamed("_id", id_col)
     return out, winners
 
 

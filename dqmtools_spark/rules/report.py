@@ -145,10 +145,6 @@ class ResultsHistory:
         """O2: one row per rule name, newest last_update wins."""
         return latest_per_key(self.all(), ["name"], "last_update").orderBy("name")
 
-    def clear_old(self, keep_latest: bool = True) -> DataFrame:
-        """Reference's clear_old_results (dqmtools.py:154-155)."""
-        return self.latest() if keep_latest else self.all().limit(0)
-
 
 def ascii_table(results: DataFrame, show_last_update: bool = True) -> str:
     """Render a (small) results DataFrame as an aligned ASCII table —

@@ -181,7 +181,8 @@ def _global_line_dedup_batch(
     (min (id, line_idx)); across batches, first ARRIVAL wins — on an
     id-ordered ingest the two orders coincide and the stream's final
     output equals ``dedup.global_line_dedup`` over the full corpus
-    (pinned by test_streaming).
+    (pinned by test_streaming).  Both writes read the one ``winners``
+    aggregate: the docs regroup its lines, the ledger takes its ``_h``.
     """
     from pyspark import StorageLevel
     from pyspark.errors import AnalysisException
@@ -317,7 +318,10 @@ def streaming_first_occurrence(pages_stream: DataFrame) -> DataFrame:
     state = one long; timeout-expired so state is bounded).
 
     The batch analog is ``operators/dedup.exact_dedup``; this is the
-    stream-native tier of the same dedup ladder.
+    stream-native tier of the same dedup ladder.  The processing-time
+    timeout asks for a micro-batch even when no data arrives, so an
+    ``availableNow`` trigger never terminates on this query unless
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` is false.
     """
     keyed = pages_stream.select(
         F.md5(F.col("text")).alias("content_hash"), "url", "warc_ts"

@@ -13,6 +13,7 @@ Cluster usage (the intended deployment — N or 4N executors):
 
 Sandbox usage (local[N] stands in for N executors):
 
+    python scripts/package_pyfiles.py
     spark-submit --master 'local[32]' \
         --py-files dist/dqmtools_spark.zip \
         scripts/run_quality_pipeline.py \

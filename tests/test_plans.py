@@ -122,6 +122,40 @@ def test_minhash_banded_join_not_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_global_line_dedup_one_aggregate_one_regroup(spark):
+    """Global line dedup is the winner aggregate and the regroup by
+    document, nothing else: each winner carries its line, so no line
+    joins back to its winner and no id list is joined on.  The input
+    has at least defaultParallelism partitions, so ``_parallelize_input``
+    adds no round-robin exchange.  A collect runs 3 jobs."""
+    import uuid
+
+    from dqmtools_spark.operators.dedup import global_line_dedup
+
+    sc = spark.sparkContext
+    n_parts = max(8, sc.defaultParallelism)
+    docs = spark.range(0, 400, numPartitions=n_parts).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws("\n", F.lit("boiler"), F.md5(F.col("id").cast("string")))
+        .alias("text"),
+    )
+    out = global_line_dedup(docs, "text", "doc_id")
+    audit = plan_audit(out)
+    assert audit["broadcast_joins"] == 0 and audit["sort_merge_joins"] == 0, audit
+    assert audit["shuffle_exchanges"] <= 2, audit
+
+    group = f"test-plans-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(rows) == 400 and sum(r["n_kept"] for r in rows) == 401
+    assert n_jobs <= 3, n_jobs
+
+
 def test_staged_jvm_phase_is_pure_codegen(spark, tmp_path):
     """Phase 2 of the staged pipeline (stats + rules from the text
     checkpoint) must contain ZERO Python evals — that is the property

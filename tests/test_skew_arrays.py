@@ -619,3 +619,89 @@ def test_global_line_dedup_hot_hash_collapses_map_side(spark):
     assert res.count() == raw_hot_rows - 1
     first = out.filter(F.col("doc_id") == 0).first()
     assert first["deduped_text"].startswith(boiler) and first["n_kept"] == 3
+
+
+def _line_dedup_reference(rows, min_chars, seen=()):
+    """First-occurrence line dedup in plain Python: walk every
+    (id, line index, line) in order, keep a line shorter than
+    ``min_chars`` always and any other line only the first time it
+    appears (or never, if it is in ``seen``).  One result per distinct
+    id, lines in index order."""
+    occurrences = sorted(
+        (doc, idx, line)
+        for doc, text in rows
+        if text is not None
+        for idx, line in enumerate(text.split("\n"))
+    )
+    won = set(seen)
+    kept = {doc: [] for doc, _ in rows}
+    for doc, _idx, line in occurrences:
+        if len(line) < min_chars or line not in won:
+            won.add(line)
+            kept[doc].append(line)
+    return {doc: ("\n".join(lines), len(lines)) for doc, lines in kept.items()}
+
+
+_EDGE_DOCS = [
+    (1, None),
+    (2, ""),
+    (3, "\n\n"),
+    (4, "  \n \t\n  "),
+    (5, "dup line\nx\ndup line"),  # repeated within the doc
+    (6, "x\ndup line"),
+    (7, "dup line\ndup line"),  # every line seen before
+    (8, "a\n\nbb\n  "),
+]
+
+
+@pytest.mark.parametrize("min_chars", [1, 2])
+def test_global_line_dedup_edge_docs_match_reference(spark, min_chars):
+    """Null, empty, blank-line, whitespace-only and all-duplicate
+    documents: every id comes back once, with the reference's text and
+    count."""
+    from dqmtools_spark.operators.dedup import global_line_dedup
+
+    df = spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string")
+    got = {
+        r["doc_id"]: (r["deduped_text"], r["n_kept"])
+        for r in global_line_dedup(df, "text", "doc_id", min_chars).collect()
+    }
+    assert got == _line_dedup_reference(_EDGE_DOCS, min_chars)
+
+
+def test_global_line_dedup_frames_seen_hashes_match_reference(spark):
+    """The batch form of the streaming core: lines in ``seen_hashes``
+    never win, and ``winners._h`` is exactly the newly kept lines."""
+    import hashlib
+
+    from dqmtools_spark.operators.dedup import global_line_dedup_frames
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    seen = ["dup line", "  "]
+    df = spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string")
+    out, winners = global_line_dedup_frames(
+        df, "text", "doc_id", 2,
+        seen_hashes=spark.createDataFrame([(md5(s),) for s in seen], "_h string"),
+    )
+    got = {r["doc_id"]: (r["deduped_text"], r["n_kept"]) for r in out.collect()}
+    assert got == _line_dedup_reference(_EDGE_DOCS, 2, seen)
+    assert {r["_h"] for r in winners.collect()} == {md5(" \t"), md5("bb")}
+
+
+def test_global_line_dedup_duplicate_ids_come_back_once(spark):
+    """Rows sharing an id are one document: their lines pool under the
+    id (ordered by line index, then text) and the id comes back in ONE
+    row, as the ``GROUP BY doc_id`` of ``oracles.global_line_dedup_sql``
+    returns it."""
+    from dqmtools_spark.operators.dedup import global_line_dedup
+
+    rows = [(1, "a line\nshared"), (1, "shared\nother"), (2, "shared")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = [
+        (r["doc_id"], r["deduped_text"], r["n_kept"])
+        for r in global_line_dedup(df, "text", "doc_id").collect()
+    ]
+    assert sorted(got) == [(1, "a line\nshared\nother", 3), (2, "", 0)]
+    assert {d: (t, n) for d, t, n in got} == _line_dedup_reference(rows, 1)

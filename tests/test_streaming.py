@@ -119,18 +119,28 @@ def test_streaming_first_occurrence_dedups_across_batches(spark, tmp_path):
 
     def run_once():
         # parquet sink (memory sink cannot recover from a checkpoint);
-        # state lives in the checkpoint across restarts
-        stream = spark.readStream.schema(spark.read.parquet(inp).schema).parquet(inp)
-        q = (
-            streaming_first_occurrence(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination(120)
+        # state lives in the checkpoint across restarts.  The
+        # processing-time timeout asks for a micro-batch even with no new
+        # data, so availableNow only terminates with no-data batches off.
+        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        q = None
+        try:
+            stream = spark.readStream.schema(spark.read.parquet(inp).schema).parquet(inp)
+            q = (
+                streaming_first_occurrence(stream)
+                .writeStream.format("parquet")
+                .option("path", out)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            assert q.awaitTermination(120), "availableNow query did not drain"
+        finally:
+            if q is not None:
+                q.stop()
+            spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+        assert q.exception() is None
 
     run_once()
     got1 = {r["url"] for r in spark.read.parquet(out).collect()}
