@@ -4,7 +4,7 @@ cluster, as assertable predicates.
 
 Used by tests to pin down scale properties that correctness tests
 can't see: broadcast joins staying broadcast, exchanges not
-multiplying, filters reaching the parquet scan.
+multiplying, no all-pairs joins, filters reaching the parquet scan.
 """
 
 from __future__ import annotations
@@ -41,7 +41,9 @@ def plan_audit(df: DataFrame) -> dict[str, int]:
         "shuffle_exchanges": nodes("Exchange"),
         "broadcast_joins": nodes("BroadcastHashJoin"),
         "sort_merge_joins": nodes("SortMergeJoin"),
-        "codegen_stages": nodes("WholeStageCodegen"),
+        # all-pairs joins: what a banded or equi-join must never become
+        "nested_loop_joins": nodes("BroadcastNestedLoopJoin")
+        + nodes("CartesianProduct"),
         "python_evals": nodes("ArrowEvalPython")
         + nodes("BatchEvalPython")
         + nodes("MapInPandas"),

@@ -48,13 +48,26 @@ def split_gzip_members(
     time (the WARC.gz layout: one record per member).  A member whose
     EXPANDED size exceeds ``max_member_bytes`` raises ValueError with
     the decompression abandoned mid-stream — bounded memory on
-    crafted input."""
+    crafted input.
+
+    Each member's decompressor gets views of the input that start at
+    1 KiB and double up to 64 KiB, so the bytes fed to a member (and
+    copied into ``unused_data`` past its end) are below twice its
+    compressed size plus 1 KiB: linear in the file size, where feeding
+    the rest of the file to every member is quadratic."""
+    view = memoryview(data)
     pos = 0
     while pos < len(data):
         d = zlib.decompressobj(wbits=zlib.MAX_WBITS | 16)
         parts, total = [], 0
-        buf = data[pos:]
-        while True:
+        fed, buf, step = pos, b"", 1 << 10
+        while not d.eof:
+            if not buf:
+                if fed >= len(data):
+                    raise ValueError("truncated gzip member")
+                buf = view[fed : fed + step]
+                fed += len(buf)
+                step = min(2 * step, 1 << 16)
             out = d.decompress(buf, 1 << 20)  # 1 MiB output chunks
             parts.append(out)
             total += len(out)
@@ -62,15 +75,13 @@ def split_gzip_members(
                 raise ValueError(
                     f"gzip member exceeds {max_member_bytes} bytes expanded"
                 )
-            if d.eof:
-                break
             nxt = d.unconsumed_tail
-            if not out and len(nxt) >= len(buf):
+            if not out and len(nxt) >= len(buf) > 0:
                 # no output and no input consumed: the stream is stuck
                 raise ValueError("truncated gzip member")
             buf = nxt
         yield b"".join(parts)
-        consumed = len(data) - pos - len(d.unused_data)
+        consumed = fed - pos - len(d.unused_data) - len(d.unconsumed_tail)
         if consumed <= 0:
             raise ValueError("gzip member consumed no bytes")
         pos += consumed

@@ -1,8 +1,11 @@
-"""Regenerate PLANS.md: the formatted physical plan of every headline
-query at sf0.01, plus the audit counters from plans/audit.py — the
-committed evidence for the plan-shape claims in SCALE.md / BENCH.
+"""Print the physical plans of ``__spark_entry__.queries()`` entries at
+sf0.01 (or $SPARK_GRAFT_ORACLE_SF): for each named query, or every
+query when none is named, its ``PLAN_AUDIT`` row as
+``tests/test_oracle_differential.py`` pins it (the nonzero
+``plan_audit`` counters, cache cleared first) and the tree section of
+its formatted plan.  Writes to stdout only.
 
-Usage: python scripts/dump_plans.py  (writes PLANS.md at the repo root)
+Usage: python scripts/dump_plans.py [query ...]
 """
 
 from __future__ import annotations
@@ -13,111 +16,28 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-HEADLINE = [
-    "pipeline_full",
-    "pipeline_staged_agg",
-    "pricing_summary",
-    "multi_join_agg",
-    "broadcast_dim_join",
-    "latest_per_key",
-    "quality_keep_summary",
-    "minhash_pairs",
-    "simhash_pairs",
-    "embedding_dup_lsh",
-    "ann_topk",
-    "ivf_topk",
-    "cosine_knn",
-    "salted_source_agg",
-    "spectral_peak",
-    "doc_line_dedup",
-    "doc_global_line_dedup",
-    "token_shards",
-    "contamination",
-    "cube_metrics",
-    "asof_latest_click",
-    "event_sessions",
-    "url_canon_dedup",
-    "doc_dup_line_fraction",
-    "stratified_sample",
-    "bloom_dedup",
-    "group_quantiles",
-    "fuzzy_prefix_pairs",
-    "inverted_index",
-    "cms_user_counts",
-    "hll_distinct",
-    "unpivot_metrics",
-    "window_rank_suite",
-    "range_interval_join",
-    "time_bucket_rollup",
-    "dup_ngram_spans",
-    "remove_dup_spans",
-    "remove_dup_spans_max",
-    "embedding_dup_lsh_banded",
-]
 
-
-def main() -> None:
+def main(names: list[str]) -> None:
     import __spark_entry__ as entry
     from dqmtools_spark.plans.audit import explain_str, plan_audit
     from dqmtools_spark.session import get_spark
 
-    sf = os.environ.get("SPARK_GRAFT_PLAN_SF", "/root/testdata/sf0.01")
-    spark = get_spark(app_name="dump_plans", master="local[4]")
+    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
+    spark = get_spark(app_name="dump_plans", master="local[4]",
+                      shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
-
-    # Plan-evidence override: same dataflow as the queries() entry with
-    # caching OFF — a persisted helper prints as one InMemoryRelation
-    # (full cached plan) PER consumer, multiplying the audit counters
-    # for a subtree that executes exactly once.
-    def _remove_dup_spans_lazy(spark, sf):
-        from dqmtools_spark.operators.dedup import remove_duplicated_spans
-
-        return remove_duplicated_spans(
-            entry._t(spark, sf, "documents"),
-            "text",
-            "doc_id",
-            n=5,
-            min_docs=2,
-            persist_covered=False,
-        )
-
-    qs["remove_dup_spans"] = _remove_dup_spans_lazy
-
-    out = [
-        "# PLANS — formatted physical plans of the headline queries",
-        "",
-        f"Generated by `python scripts/dump_plans.py` at sf_dir={sf}.",
-        "Audit counters come from `dqmtools_spark/plans/audit.py`; the",
-        "properties the tests pin (one ArrowEvalPython in the pipeline,",
-        "broadcasts staying broadcasts, banded joins never cartesian,",
-        "filters reaching the scan) are visible in the raw plans below.",
-        "",
-    ]
-    for name in HEADLINE:
+    for name in names or sorted(qs):
+        # an earlier eager query's cached output would change this plan
+        spark.catalog.clearCache()
         df = qs[name](spark, sf)
-        audit = plan_audit(df)
-        plan = explain_str(df)
-        # keep the tree section (up to the first node-detail block) —
-        # the full detail dump repeats every node and drowns the signal
-        tree = plan.split("\n\n")[0]
-        tree = re.sub(r"#\d+L?", "", tree)  # strip expr ids for stable diffs
-        out += [
-            f"## {name}",
-            "",
-            f"audit: {audit}",
-            "",
-            "```",
-            tree.strip(),
-            "```",
-            "",
-        ]
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(HEADLINE)} queries)")
+        row = ", ".join(f"{k}={v}" for k, v in plan_audit(df).items() if v)
+        # the tree section, before the per-node detail blocks, with
+        # expression ids stripped
+        tree = re.sub(r"#\d+L?", "", explain_str(df).split("\n\n")[0])
+        print(f'"{name}": dict({row}),\n\n{tree.strip()}\n', flush=True)
     spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

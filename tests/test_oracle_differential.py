@@ -1,10 +1,15 @@
 """Local replica of the driver's DuckDB oracle check (SURVEY §5.2).
 
 For every queries() entry with an oracle_sql(): run both at sf0.01 (or
-$SPARK_GRAFT_TEST_SF), sort columns by name, and compare row multisets
+$SPARK_GRAFT_ORACLE_SF), sort columns by name, and compare row multisets
 EXACTLY (floats included — the driver hashes values, so exact agreement
 is the bar; every float column is rounded inside the queries
 themselves).
+
+Before it runs, each query's plan must match its ``PLAN_AUDIT`` row:
+the nonzero ``plan_audit`` counters, so a plan-shape regression (a
+broadcast falling back to sort-merge, an all-pairs join, an extra
+exchange, a Python stage) fails here even when the rows stay right.
 """
 
 from __future__ import annotations
@@ -16,6 +21,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from dqmtools_spark.plans.audit import plan_audit
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 
@@ -26,6 +32,90 @@ TABLES = [
 
 _ORACLES = entry_mod.oracle_sql()
 _QUERIES = entry_mod.queries()
+
+# Nonzero plan_audit counters per query at sf0.01, cache cleared first;
+# print a row and its plan with `python scripts/dump_plans.py <name>`.
+# An eager query's cached subplan prints once per consumer, so queries
+# such as remove_dup_spans count far more nodes than they execute.
+PLAN_AUDIT = {
+    "ann_topk": dict(python_evals=1, pushed_filters=1),
+    "anti_join_resume": dict(exchanges=2, shuffle_exchanges=1, broadcast_joins=1, pushed_filters=1),
+    "array_norm": dict(),
+    "array_slice": dict(),
+    "array_stats": dict(),
+    "asof_latest_click": dict(exchanges=2, shuffle_exchanges=2, pushed_filters=2),
+    "bloom_dedup": dict(exchanges=6, shuffle_exchanges=3, broadcast_joins=3, pushed_filters=4),
+    "broadcast_dim_join": dict(exchanges=3, shuffle_exchanges=1, broadcast_joins=2, pushed_filters=3),
+    "channel_stats": dict(exchanges=1, shuffle_exchanges=1),
+    "cms_user_counts": dict(exchanges=5, shuffle_exchanges=3, broadcast_joins=2),
+    "contamination": dict(exchanges=4, shuffle_exchanges=3, broadcast_joins=1, pushed_filters=2),
+    "cosine_dup_pairs": dict(exchanges=1, nested_loop_joins=1, pushed_filters=2),
+    "cosine_knn": dict(pushed_filters=1),
+    "cube_metrics": dict(exchanges=1, shuffle_exchanges=1),
+    "dedup_clusters": dict(exchanges=1, shuffle_exchanges=1),
+    "dedup_then_join": dict(exchanges=3, shuffle_exchanges=2, broadcast_joins=1, pushed_filters=2),
+    "desparsify_check": dict(),
+    "doc_dup_line_fraction": dict(exchanges=2, shuffle_exchanges=2),
+    "doc_exact_dedup": dict(exchanges=2, shuffle_exchanges=2),
+    "doc_fingerprint": dict(exchanges=1, shuffle_exchanges=1),
+    "doc_global_line_dedup": dict(exchanges=4, shuffle_exchanges=4),
+    "doc_lang_mode": dict(exchanges=2, shuffle_exchanges=2),
+    "doc_line_dedup": dict(),
+    "doc_stopword_fraction": dict(exchanges=1, shuffle_exchanges=1),
+    "doc_token_count": dict(exchanges=1, shuffle_exchanges=1),
+    "doc_top_bigram": dict(exchanges=4, shuffle_exchanges=3, broadcast_joins=1, pushed_filters=2),
+    "doc_word_stats": dict(exchanges=1, shuffle_exchanges=1),
+    "dup_ngram_spans": dict(exchanges=16, shuffle_exchanges=14, broadcast_joins=2),
+    "embedding_dup_lsh": dict(exchanges=1, broadcast_joins=1, python_evals=4, pushed_filters=2),
+    "embedding_dup_lsh_banded": dict(exchanges=7, shuffle_exchanges=2, broadcast_joins=6, python_evals=4, pushed_filters=2),
+    "event_sessions": dict(exchanges=1, shuffle_exchanges=1),
+    "events_minmax": dict(exchanges=2, shuffle_exchanges=2),
+    "filter_compound": dict(exchanges=1, shuffle_exchanges=1, pushed_filters=1),
+    "filter_sql_string": dict(exchanges=1, shuffle_exchanges=1, pushed_filters=1),
+    "float_lsh_invariant": dict(),
+    "fuzzy_prefix_pairs": dict(exchanges=5, shuffle_exchanges=2, broadcast_joins=3, pushed_filters=4),
+    "group_distinct_violation": dict(exchanges=3, shuffle_exchanges=3),
+    "group_mode": dict(exchanges=2, shuffle_exchanges=2),
+    "group_quantiles": dict(exchanges=1, shuffle_exchanges=1),
+    "histogram_totalprice": dict(exchanges=1, shuffle_exchanges=1),
+    "hll_distinct": dict(exchanges=5, shuffle_exchanges=4, nested_loop_joins=1),
+    "inverted_index": dict(exchanges=1, shuffle_exchanges=1),
+    "ivf_topk": dict(python_evals=1, pushed_filters=1),
+    "json_regex_extract": dict(exchanges=1, shuffle_exchanges=1),
+    "latest_per_key": dict(exchanges=1, shuffle_exchanges=1),
+    "minhash_pairs": dict(exchanges=39, shuffle_exchanges=33, broadcast_joins=6),
+    "multi_join_agg": dict(exchanges=3, shuffle_exchanges=1, broadcast_joins=2, pushed_filters=3),
+    "ngram_jaccard": dict(exchanges=1, nested_loop_joins=1, pushed_filters=2),
+    "pipeline_full": dict(exchanges=1, broadcast_joins=1, python_evals=1),
+    "pipeline_staged_agg": dict(exchanges=2, shuffle_exchanges=1, broadcast_joins=1),
+    "pivot_matrix": dict(exchanges=2, shuffle_exchanges=2, pushed_filters=1),
+    "prescale_sample": dict(exchanges=1, shuffle_exchanges=1, pushed_filters=1),
+    "pricing_summary": dict(exchanges=1, shuffle_exchanges=1, pushed_filters=1),
+    "project_compute": dict(),
+    "quality_keep_summary": dict(exchanges=1, shuffle_exchanges=1),
+    "range_interval_join": dict(exchanges=1, broadcast_joins=1, pushed_filters=2),
+    "record_select": dict(exchanges=3, shuffle_exchanges=2, broadcast_joins=1, pushed_filters=1),
+    "remove_dup_spans": dict(exchanges=152, shuffle_exchanges=126, broadcast_joins=26, pushed_filters=3),
+    "remove_dup_spans_max": dict(exchanges=272, shuffle_exchanges=227, broadcast_joins=45, sort_merge_joins=1, pushed_filters=3),
+    "robust_stats": dict(exchanges=3, shuffle_exchanges=2, broadcast_joins=1, pushed_filters=2),
+    "salted_source_agg": dict(exchanges=2, shuffle_exchanges=2),
+    "semi_join_exists": dict(exchanges=2, shuffle_exchanges=1, broadcast_joins=1, pushed_filters=2),
+    "set_ops": dict(exchanges=3, shuffle_exchanges=1, broadcast_joins=2, pushed_filters=3),
+    "simhash_pairs": dict(exchanges=19, shuffle_exchanges=17, broadcast_joins=2),
+    "spectral_peak": dict(python_evals=1),
+    "stratified_sample": dict(exchanges=1, shuffle_exchanges=1),
+    "string_funcs": dict(exchanges=1, shuffle_exchanges=1),
+    "time_bucket_rollup": dict(exchanges=1, shuffle_exchanges=1),
+    "token_shards": dict(exchanges=1, shuffle_exchanges=1),
+    "topk_orders": dict(),
+    "tz_format": dict(exchanges=1, shuffle_exchanges=1),
+    "union_append": dict(exchanges=1, shuffle_exchanges=1, pushed_filters=2),
+    "unpivot_metrics": dict(exchanges=4, shuffle_exchanges=2, broadcast_joins=2, pushed_filters=3),
+    "url_canon_dedup": dict(exchanges=1, shuffle_exchanges=1),
+    "value_remap": dict(exchanges=1, shuffle_exchanges=1),
+    "window_rank_suite": dict(exchanges=1, shuffle_exchanges=1, pushed_filters=1),
+    "window_running_sum": dict(exchanges=1, shuffle_exchanges=1),
+}
 
 
 def _duck(sql: str) -> pd.DataFrame:
@@ -60,7 +150,12 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_query_matches_oracle(spark, name):
-    got = _normalize(_QUERIES[name](spark, SF_DIR).toPandas())
+    # an earlier eager query's cached output would change this plan
+    spark.catalog.clearCache()
+    df = _QUERIES[name](spark, SF_DIR)
+    audit = {k: v for k, v in plan_audit(df).items() if v}
+    assert audit == PLAN_AUDIT[name], f"{name} plan audit: {audit}"
+    got = _normalize(df.toPandas())
     want = _normalize(_duck(_ORACLES[name]))
     assert list(got.columns) == list(want.columns), (
         f"{name}: column mismatch {list(got.columns)} vs {list(want.columns)}"
@@ -86,26 +181,13 @@ def test_query_matches_oracle(spark, name):
             assert mism == 0, f"{name}.{c}: {mism} mismatched values"
 
 
-def test_every_query_runs(spark):
-    """rows-only smoke for queries without oracle (driver's weak check)."""
-    no_oracle = set(_QUERIES) - set(_ORACLES)
-    for name in sorted(no_oracle):
-        df = _QUERIES[name](spark, SF_DIR)
-        assert df.count() >= 0, name
+def test_every_query_has_oracle_and_plan_row():
+    assert set(_QUERIES) == set(_ORACLES) == set(PLAN_AUDIT)
 
 
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
-
-
-@pytest.mark.parametrize("name", sorted(set(_QUERIES) - set(_ORACLES)))
-def test_rows_only_query_runs(spark, name):
-    """Driver fallback check for non-SQL-expressible entries: the query
-    must run at sf and produce a stable schema with >= 0 rows."""
-    df = _QUERIES[name](spark, SF_DIR)
-    assert df.schema.fields, name
-    assert df.count() >= 0, name
 
 
 def test_extract_text_identity_on_driver_corpus():

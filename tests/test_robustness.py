@@ -217,3 +217,36 @@ def test_quantization_exact_half_is_engine_consistent(spark):
         int_bucket_expr(F.col("embedding"), planes).alias("b")
     ).first()["b"]
     assert b_udf == b_expr == int_bucket_py(v, planes)
+
+
+def test_warc_member_split_feeds_linear_bytes(monkeypatch):
+    """A Common Crawl segment holds tens of thousands of gzip members.
+    Each member's decompressor must get a bounded window of the file,
+    not the rest of it, or the split copies members x file size bytes."""
+    import gzip
+    import random
+    import zlib
+
+    from dqmtools_spark.sources.warc import split_gzip_members
+
+    rng = random.Random(7)
+    members = [rng.randbytes(1000) for _ in range(4000)]
+    data = b"".join(gzip.compress(m) for m in members)
+    size, fed = len(data), 0
+    real_decompressobj = zlib.decompressobj
+
+    class CountingDecompressor:
+        def __init__(self, *args, **kwargs):
+            self._d = real_decompressobj(*args, **kwargs)
+
+        def decompress(self, buf, max_length=0):
+            nonlocal fed
+            fed += len(buf)
+            return self._d.decompress(buf, max_length)
+
+        def __getattr__(self, name):
+            return getattr(self._d, name)
+
+    monkeypatch.setattr(zlib, "decompressobj", CountingDecompressor)
+    assert list(split_gzip_members(data)) == members
+    assert fed <= 3 * size, (fed, size)
