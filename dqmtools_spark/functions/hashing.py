@@ -37,6 +37,11 @@ def md5_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
+def md5_hash60_expr(expr: str) -> str:
+    """Spark SQL text of :func:`md5_hash60` of the SQL expression ``expr``."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
 def md5_hash60_sql(expr: str) -> str:
     """DuckDB SQL fragment computing :func:`md5_hash60` of ``expr``."""
     return f"(('0x' || SUBSTRING(MD5({expr}), 1, 15))::BIGINT)"

@@ -47,11 +47,11 @@ def contamination_flags(
     shuffles its full gram inventory.
     """
     eval_grams = (
-        eval_set.select(F.explode(_gram_hashes(F.col(text_col), n)).alias("_g"))
+        eval_set.select(F.explode(_gram_hashes(text_col, n)).alias("_g"))
         .distinct()
     )
     corpus_grams = corpus.select(
-        F.col(id_col), F.explode(_gram_hashes(F.col(text_col), n)).alias("_g")
+        F.col(id_col), F.explode(_gram_hashes(text_col, n)).alias("_g")
     )
     return (
         corpus_grams.join(F.broadcast(eval_grams), "_g")

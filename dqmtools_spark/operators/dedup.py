@@ -44,11 +44,39 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ------------------------------------------------------------- shingles
 
 
+def _sql_of(col: F.Column | str) -> str:
+    """SQL text of a column argument: a name comes back backquoted; a
+    Column renders as its own SQL, so it must be one whose SQL form
+    parses back (``F.col("text")``, ``F.lower("text")``)."""
+    if isinstance(col, str):
+        return "`" + col.replace("`", "``") + "`"
+    return col._jc.toString()
+
+
+def _word_shingles_sql(text: str, n: int, strict: bool, distinct: bool) -> str:
+    """SQL text of :func:`word_shingles` over the SQL expression ``text``."""
+    words = rf"filter(split({text}, '\\s+'), _sh_w -> _sh_w != '')"
+    hi = f"size({words}) - {n - 1}"
+    if not strict:
+        hi = f"greatest({hi}, 1)"
+    # sequence(1, 0) DESCENDS in Spark — an empty index list needs an
+    # explicit guard for the strict short-doc case
+    grams = (
+        f"transform(CASE WHEN {hi} >= 1 THEN sequence(1, {hi}) "
+        f"ELSE CAST(array() AS array<int>) END, "
+        f"_sh_i -> concat_ws(' ', slice({words}, _sh_i, {n})))"
+    )
+    if distinct:
+        grams = f"array_distinct({grams})"
+    return f"CASE WHEN {text} IS NOT NULL THEN {grams} END"
+
+
 def word_shingles(
-    text: F.Column, n: int = 3, strict: bool = False, distinct: bool = True
+    text: F.Column | str, n: int = 3, strict: bool = False, distinct: bool = True
 ) -> F.Column:
     """Word n-grams (array<string>; ``distinct=False`` keeps every
     occurrence — repetition-counting consumers need multiplicity).
+    ``text`` is a column name or a Column (see :func:`_sql_of`).
 
     Tokens are the \\S+ runs — empty strings from leading/trailing
     whitespace of ANY kind are dropped (``trim`` alone strips only
@@ -59,25 +87,12 @@ def word_shingles(
     similarity-style consumers.  ``strict=True``: such docs yield NO
     grams — the right contract for n-gram OVERLAP semantics
     (decontamination), where "shares an n-gram" must mean n real words.
-    NULL text -> NULL (a null doc must never pair)."""
-    words = F.filter(F.split(text, r"\s+"), lambda w: w != "")
-    hi = (
-        F.size(words) - (n - 1)
-        if strict
-        else F.greatest(F.size(words) - (n - 1), F.lit(1))
-    )
-    # sequence(1, 0) DESCENDS in Spark — an empty index list needs an
-    # explicit guard for the strict short-doc case
-    idx = F.when(hi >= 1, F.sequence(F.lit(1), hi)).otherwise(
-        F.array().cast("array<int>")
-    )
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, n)))
-    if distinct:
-        grams = F.array_distinct(grams)
-    return F.when(text.isNotNull(), grams)
+    NULL text -> NULL (a null doc must never pair).  Built as ONE SQL
+    expression: as Column calls it cost ~110 Py4J round trips."""
+    return F.expr(_word_shingles_sql(_sql_of(text), n, strict, distinct))
 
 
-def word_shingle_hashes(text: F.Column, n: int = 3) -> F.Column:
+def word_shingle_hashes(text: F.Column | str, n: int = 3) -> F.Column:
     """Distinct 64-bit hashes of word n-grams (array<long>).
 
     Built by zip_with-chaining the word array against its own 1..n-1
@@ -88,29 +103,33 @@ def word_shingle_hashes(text: F.Column, n: int = 3) -> F.Column:
     not strings.  Jaccard over hashed shingles equals Jaccard over the
     strings up to 64-bit collisions (negligible at any realistic
     shingle count).  Docs shorter than n words hash their full
-    (null-padded) token window so they still participate.
+    (null-padded) token window so they still participate.  ``text`` is
+    a column name or a Column; the build is one SQL expression (as
+    Column calls it cost ~170 Py4J round trips).
     """
-    words = F.split(F.trim(text), r"\s+")
-    sz = F.size(words)
-    acc = F.transform(words, lambda w: F.xxhash64(w))
+    words = rf"split(trim({_sql_of(text)}), '\\s+')"
+    acc = f"transform({words}, _sh_w -> xxhash64(_sh_w))"
     for j in range(1, n):
-        shifted = F.slice(words, j + 1, F.greatest(sz - j, F.lit(0)))
-        acc = F.zip_with(acc, shifted, lambda h, w: F.xxhash64(h, w))
-    grams = F.slice(acc, 1, F.greatest(sz - (n - 1), F.lit(1)))
-    return F.array_distinct(grams)
+        shifted = f"slice({words}, {j + 1}, greatest(size({words}) - {j}, 0))"
+        acc = f"zip_with({acc}, {shifted}, (_sh_h, _sh_w) -> xxhash64(_sh_h, _sh_w))"
+    return F.expr(
+        f"array_distinct(slice({acc}, 1, greatest(size({words}) - {n - 1}, 1)))"
+    )
 
 
-def portable_shingle_hashes(text: F.Column, n: int, strict: bool = False) -> F.Column:
+def portable_shingle_hashes(
+    text: F.Column | str, n: int, strict: bool = False, distinct: bool = True
+) -> F.Column:
     """Engine-portable hashed word n-grams: md5_hash60(shingle) mod p
     (array<long>) — the ONE definition of the oracle-checkable shingle
-    hash family, shared by the md5 MinHash tier and decontamination."""
-    from dqmtools_spark.functions.hashing import P31, md5_hash60
+    hash family, shared by the md5 MinHash tier, decontamination and
+    the repeated-span operators (``distinct=False`` keeps one hash per
+    gram position)."""
+    from dqmtools_spark.functions.hashing import P31, md5_hash60_expr
 
-    return F.array_distinct(
-        F.transform(
-            word_shingles(text, n, strict=strict), lambda s: md5_hash60(s) % P31
-        )
-    )
+    grams = _word_shingles_sql(_sql_of(text), n, strict, distinct)
+    hashes = f"transform({grams}, _sh_s -> {md5_hash60_expr('_sh_s')} % {P31})"
+    return F.expr(f"array_distinct({hashes})" if distinct else hashes)
 
 
 def jaccard(a: str, b: str) -> str:
@@ -136,10 +155,10 @@ def ngram_jaccard_pairs(
     :func:`minhash_lsh_pairs`, which calls the same verify.
     """
     s = df.select(
-        F.col(id_col).alias("id_a"), word_shingles(F.col(text_col), n).alias("sh_a")
+        F.col(id_col).alias("id_a"), word_shingles(text_col, n).alias("sh_a")
     )
     t = df.select(
-        F.col(id_col).alias("id_b"), word_shingles(F.col(text_col), n).alias("sh_b")
+        F.col(id_col).alias("id_b"), word_shingles(text_col, n).alias("sh_b")
     )
     pairs = s.join(t, F.col("id_a") < F.col("id_b"))
     return pairs.selectExpr(
@@ -353,7 +372,7 @@ def minhash_lsh_pairs(
     df = _parallelize_input(df)
     base = df.select(
         F.col(id_col).alias("_id"),
-        word_shingle_hashes(F.col(text_col), n).alias("_sh"),
+        word_shingle_hashes(text_col, n).alias("_sh"),
     )
     helpers = []
     if persist_shingles:
@@ -414,7 +433,7 @@ def minhash_lsh_pairs_md5(
 
     consts = universal_hash_consts(num_hashes)
     df = _parallelize_input(df)
-    sh = portable_shingle_hashes(F.col(text_col), n)
+    sh = portable_shingle_hashes(text_col, n)
     base = df.select(F.col(id_col).alias("_id"), sh.alias("_sh")).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -522,11 +541,77 @@ def connected_components(
     )
 
 
+# a pair list of at most this many rows is clustered on the driver (see
+# drop_duplicate_clusters).  Timed on 4 cores, the driver path wins up
+# to 10k pair rows and loses from 20k, where planning the long NOT IN
+# list outweighs the distributed path's jobs (table in CHANGES.md)
+DRIVER_CLUSTER_BOUND = 10_000
+
+
+def _driver_orderable(t: T.DataType) -> bool:
+    """Whether Python orders collected values of ``t`` as Spark does:
+    ints do, and so do default-collation strings (UTF-8 byte order is
+    code-point order)."""
+    return isinstance(t, T.IntegralType) or t == T.StringType()
+
+
+def _union_find_losers(edges) -> list:
+    """Ids that are not their cluster's minimum, by union-find over the
+    (id_a, id_b) rows with the smaller root winning.  An edge with a
+    NULL end joins nothing, as in :func:`connected_components`, whose
+    label join never matches a NULL."""
+    parent: dict = {}
+
+    def find(x):
+        while x in parent:
+            up = parent[x]
+            if up in parent:  # path halving
+                parent[x] = up = parent[up]
+            x = up
+        return x
+
+    for a, b in edges:
+        if a is None or b is None:
+            continue
+        lo, hi = sorted((find(a), find(b)))
+        if lo != hi:
+            parent[hi] = lo
+    return list(parent)
+
+
+def _sql_literal(v) -> str:
+    # string literals under the default spark.sql.parser.escapedStringLiterals
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(int(v))
+
+
 def drop_duplicate_clusters(
     df: DataFrame, pairs: DataFrame, id_col: str, max_iters: int = 20
 ) -> DataFrame:
     """Keep exactly one representative (the smallest id) per duplicate
-    CLUSTER — the transitive version of :func:`drop_near_duplicates`."""
+    CLUSTER — the transitive version of :func:`drop_near_duplicates`.
+    Rows with a NULL id are kept.
+
+    A pair list of at most ``DRIVER_CLUSTER_BOUND`` rows with integral
+    or string ids is finished on the driver: one job collects it (at
+    most bound + 1 rows, so a large list costs a bounded read), a
+    union-find labels each cluster with its minimum id, and ``df`` comes
+    back behind ONE SQL-text filter, ``id IS NULL OR id NOT IN
+    (losers)`` — no join, no further job.  Larger lists, and id types
+    whose Python order is not Spark's, take the distributed
+    :func:`connected_components` plus a ``left_anti`` join; ``max_iters``
+    applies only there."""
+    id_types = [pairs.schema[c].dataType for c in ("id_a", "id_b")]
+    if all(map(_driver_orderable, id_types)):
+        rows = pairs.select("id_a", "id_b").limit(DRIVER_CLUSTER_BOUND + 1).collect()
+        if len(rows) <= DRIVER_CLUSTER_BOUND:
+            losers = _union_find_losers(rows)
+            if not losers:
+                return df
+            col = _sql_of(id_col)
+            ids = ", ".join(map(_sql_literal, losers))
+            return df.filter(f"{col} IS NULL OR {col} NOT IN ({ids})")
     comp = connected_components(pairs, max_iters)
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
@@ -783,16 +868,11 @@ def duplicated_ngram_spans(
     """
     from pyspark import StorageLevel
 
-    from dqmtools_spark.functions.hashing import P31, md5_hash60
-
     df = _parallelize_input(df)
     grams = df.select(
         F.col(id_col),
         F.explode(
-            F.transform(
-                word_shingles(F.col(text_col), n, strict=True, distinct=False),
-                lambda s: md5_hash60(s) % P31,
-            )
+            portable_shingle_hashes(text_col, n, strict=True, distinct=False)
         ).alias("gh"),
     )
     helpers = []
@@ -885,8 +965,6 @@ def remove_duplicated_spans(
     """
     from pyspark import StorageLevel
 
-    from dqmtools_spark.functions.hashing import P31, md5_hash60
-
     df = _parallelize_input(df)
     words = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
     base = df.filter(F.col(text_col).isNotNull()).select(
@@ -897,10 +975,7 @@ def remove_duplicated_spans(
     grams = df.select(
         F.col(id_col),
         F.posexplode(
-            F.transform(
-                word_shingles(F.col(text_col), n, strict=True, distinct=False),
-                lambda s: md5_hash60(s) % P31,
-            )
+            portable_shingle_hashes(text_col, n, strict=True, distinct=False)
         ).alias("s", "gh"),
     )
     if persist_grams:
@@ -1049,11 +1124,11 @@ def global_line_dedup(
 
     Scale shape — the canonical global span-dedup plan, all rows
     O(corpus lines), no all-pairs anything, no join:
-      1. posexplode lines, key = md5(line) (narrow 32-byte shuffle key
-         instead of the raw line; md5 keeps the oracle portable),
-      2. winner per key = ``min(struct(id, idx, line))`` — ONE
-         aggregate with map-side partial combine; the winner carries
-         its line, so nothing joins back to it,
+      1. posexplode lines,
+      2. winner per distinct line = ``min(struct(id, idx))`` — ONE
+         aggregate keyed by the line itself, with map-side partial
+         combine; the line crosses the exchange once, as the key, and
+         nothing joins back to it,
       3. one groupBy(id) over winners, short lines and per-doc stubs
          reassembles each doc (sorted by line index).
     Deterministic across runs and cluster sizes: winners are pure mins.
@@ -1072,8 +1147,9 @@ def global_line_dedup_frames(
     """The shared core of batch AND incremental global line dedup:
     returns ``(out, winners)`` where ``out`` is the
     (id, deduped_text, n_kept) result and ``winners`` the one-row-per-
-    newly-kept-line-hash frame (column ``_h``) — the increment a
-    streaming ledger appends; ``out`` regroups its ``_w`` lines.
+    newly-kept-line frame (``_h`` = md5(line), ``_id``, ``_idx``,
+    ``_line``) — the ledger increment a stream appends is its ``_h``;
+    ``out`` regroups its lines.
 
     ``seen_hashes`` (a frame with column ``_h``) excludes lines the
     corpus has ALREADY kept (prior micro-batches): they get no winner
@@ -1092,14 +1168,24 @@ def global_line_dedup_frames(
     ex = df.select(
         F.col(id_col).alias("_id"), F.posexplode_outer(lines).alias("_idx", "_line")
     )
-    fresh = ex.filter(F.length("_line") >= min_chars).withColumn("_h", F.md5("_line"))
+    fresh = ex.filter(F.length("_line") >= min_chars)
     if seen_hashes is not None:
-        fresh = fresh.join(seen_hashes.select("_h"), "_h", "anti")
-    winners = fresh.groupBy("_h").agg(
-        F.min(F.struct("_id", "_idx", "_line")).alias("_w")
+        fresh = (
+            fresh.withColumn("_h", F.md5("_line"))
+            .join(seen_hashes.select("_h"), "_h", "anti")
+            .drop("_h")
+        )
+    # keyed by the line, not md5(line): the exchange then carries each
+    # line once, as the key, with no 32-char hash beside it (a near_dup
+    # benchmark iteration shuffles 3.90 MB, against 4.56 MB with the md5
+    # key).  The ledger's _h is taken after the aggregate; out drops it.
+    winners = (
+        fresh.groupBy("_line")
+        .agg(F.min(F.struct("_id", "_idx")).alias("_w"))
+        .select(F.md5("_line").alias("_h"), "_w._id", "_w._idx", "_line")
     )
     exempt = F.col("_line").isNull() | (F.length("_line") < min_chars)
-    kept = ex.filter(exempt).unionByName(winners.select("_w.*"))
+    kept = ex.filter(exempt).unionByName(winners.drop("_h"))
     # array_join and count both skip the stub's NULL line
     out = kept.groupBy("_id").agg(
         F.array_join(

@@ -36,7 +36,7 @@ def top_ngram_stats(
     contract for a repetition signal (a null doc has no modal gram),
     and the one the DuckDB oracle shares.
     """
-    grams = word_shingles(F.col(text_col), n, distinct=False)
+    grams = word_shingles(text_col, n, distinct=False)
     ex = df.select(
         F.col(id_col),
         F.length(text_col).alias("_nch"),

@@ -16,10 +16,11 @@ from dqmtools_spark.operators.dedup import (
 )
 
 # every Column call costs Py4J round trips: on the sf0.001 documents a
-# lazy build measured 280 (xxhash tier) and 255 (md5 tier) commands,
-# against 3,920 and 4,745 when each hash, band and min was its own
-# Column call and PySpark captured a call site for each
-MAX_BUILD_COMMANDS = 400
+# lazy build measured 109 commands in either tier with the shingle
+# builders as SQL text, 280 (xxhash tier) and 255 (md5 tier) with them
+# as Column calls, and 3,920 and 4,745 when each hash, band and min was
+# its own Column call and PySpark captured a call site for each
+MAX_BUILD_COMMANDS = 109
 
 _WORDS = st.sampled_from(["a", "b", "cat", "dog", "Zürich", "x1", "ω"])
 _SEPS = st.sampled_from([" ", "  ", "\n", "\t", " \n "])

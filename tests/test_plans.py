@@ -104,6 +104,41 @@ def test_global_line_dedup_one_aggregate_one_regroup(spark):
     assert n_jobs <= 3, n_jobs
 
 
+def test_drop_duplicate_clusters_below_bound_one_job_no_join(spark):
+    """Below ``DRIVER_CLUSTER_BOUND`` clusters finish on the driver: one
+    job reads the pair list (cached in one partition, as the eager LSH
+    pair cache is), and the survivors are the input behind one filter,
+    with no join in their plan."""
+    import uuid
+
+    from dqmtools_spark.operators.dedup import drop_duplicate_clusters
+
+    sc = spark.sparkContext
+    pairs = (
+        spark.createDataFrame(
+            [(2 * i, 2 * i + 1) for i in range(40)], "id_a long, id_b long"
+        )
+        .coalesce(1)
+        .cache()
+    )
+    pairs.count()
+    docs = spark.range(100).withColumnRenamed("id", "doc_id")
+    group = f"test-plans-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        survivors = drop_duplicate_clusters(docs, pairs, "doc_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    plan = explain_str(survivors)
+    kept = sorted(r["doc_id"] for r in survivors.collect())
+    pairs.unpersist()
+    assert n_jobs <= 1, n_jobs
+    assert "Join" not in plan, plan
+    assert kept == list(range(0, 80, 2)) + list(range(80, 100))
+
+
 def test_staged_jvm_phase_is_pure_codegen(spark, tmp_path):
     """Phase 2 of the staged pipeline (stats + rules from the text
     checkpoint) must contain ZERO Python evals — that is the property
