@@ -25,13 +25,13 @@ interleaves both per task and is more sensitive to batch pipelining
 (see perfbench), so the staged form is also what the scaling benchmark
 exercises.
 
-Rule metrics are a separate aggregation over the (cheap,
-already-computed) boolean columns.
+Rule metrics aggregate the written ``doc_results``; a whole job
+submission, pipeline to report, is :func:`dqmtools_spark.job.submit`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dqmtools_spark.functions import textstats
@@ -92,22 +92,6 @@ def jvm_phase(
     return join_lang_thresholds(df, spark)
 
 
-def enrich_pages(
-    df: DataFrame,
-    spark: SparkSession,
-    reextract: bool = True,
-    n_buckets: int = DEFAULT_PART_BUCKETS,
-    models: dict | None = None,
-) -> DataFrame:
-    """pages -> pages + extracted text + lang_pred + stats + thresholds
-    (both phases, fused into one job)."""
-    return jvm_phase(
-        python_phase(df, reextract=reextract, models=models),
-        spark,
-        n_buckets=n_buckets,
-    )
-
-
 def _fold_results(
     enriched: DataFrame, registry: RuleRegistry
 ) -> tuple[DataFrame, list[RuleBuildOutcome]]:
@@ -142,11 +126,10 @@ def run_pipeline(
     """Full per-document pipeline, one fused job; returns
     (doc_results, rule outcomes).  ``models`` swaps in real
     langid/perplexity models (see :func:`python_phase`)."""
-    registry = registry or default_registry()
-    enriched = enrich_pages(
-        pages, spark, reextract=reextract, n_buckets=n_buckets, models=models
+    phase1 = python_phase(pages, reextract=reextract, models=models)
+    return _fold_results(
+        jvm_phase(phase1, spark, n_buckets=n_buckets), registry or default_registry()
     )
-    return _fold_results(enriched, registry)
 
 
 def staged_checkpoint_complete(spark: SparkSession, checkpoint_path: str) -> bool:
@@ -189,33 +172,23 @@ def run_pipeline_staged(
     return _fold_results(enriched, registry)
 
 
-def rule_metrics(evaluated: DataFrame, prefix: str = "pass_") -> DataFrame:
-    """Docs in/out per rule per language — the counters the north rule
-    requires; cube() gives per-lang, per-rule, and grand totals in one
-    shuffle (the reference's nested suite summaries, SURVEY §2.5)."""
-    pass_cols = [c for c in evaluated.columns if c.startswith(prefix)]
-    aggs = [F.count(F.lit(1)).alias("docs_in"), F.count_if(F.col("keep")).alias("docs_out")] + [
-        F.count_if(~F.col(c)).alias(f"fail_{c[len(prefix):]}") for c in pass_cols
-    ]
-    return evaluated.cube("lang_pred").agg(*aggs)
-
-
-def rule_metrics_from_results(doc_results: DataFrame, rule_names: list[str]) -> DataFrame:
-    """Same metrics cube as :func:`rule_metrics`, computed from the
-    WRITTEN ``doc_results`` table instead of the live evaluated frame:
-    a rule's failure is recorded in the ``reasons`` array, so
-    ``fail_<rule> = count_if(array_contains(reasons, rule))``.
-
-    This is how the job CLI derives counters — one cheap codegen scan
-    of the output parquet, instead of re-running the fused Python phase
-    over the raw input a second time (which would double the dominant
-    cost at the 100 TB design point).
-    """
-    aggs = [
+def rule_metrics_aggs(rule_names: list[str]) -> list[Column]:
+    """Docs in/out and one ``fail_<rule>`` count per rule, read from
+    the ``reasons`` array: a rule's failure is recorded there, so
+    ``fail_<rule> = count_if(array_contains(reasons, rule))``."""
+    return [
         F.count(F.lit(1)).alias("docs_in"),
         F.count_if(F.col("keep")).alias("docs_out"),
     ] + [
         F.count_if(F.array_contains(F.col("reasons"), name)).alias(f"fail_{name}")
         for name in rule_names
     ]
-    return doc_results.cube("lang_pred").agg(*aggs)
+
+
+def rule_metrics_from_results(doc_results: DataFrame, rule_names: list[str]) -> DataFrame:
+    """Docs in/out per rule per language over the WRITTEN
+    ``doc_results``, and their grand totals: cube() gives both in one
+    shuffle (the reference's nested suite summaries, SURVEY §2.5) of one
+    codegen scan, which never re-runs the Python phase over the input.
+    """
+    return doc_results.cube("lang_pred").agg(*rule_metrics_aggs(rule_names))

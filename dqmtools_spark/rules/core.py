@@ -149,12 +149,7 @@ def rule_level_results(
 ) -> list[dict]:
     """Dataset-level result rows per rule (reference result model
     dqmtools.py:75): one aggregation pass computes every rule's
-    fail-count; statuses fold per group and overall.
-
-    Returns plain dicts (name, status, message, last_update) — callers
-    turn them into a results table / append them to history.
-    """
-    now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    fail-count, then :func:`fold_rule_results` folds them."""
     applied = [o for o in outcomes if o.column is not None]
     aggs = [F.count(F.lit(1)).alias("_n")] + [
         F.count_if(~F.col(f"{prefix}{o.rule.name}")).alias(o.rule.name)
@@ -162,14 +157,26 @@ def rule_level_results(
     ]
     counts = evaluated.agg(*aggs).collect()[0].asDict()
     n = counts.pop("_n")
+    return fold_rule_results(outcomes, n, counts, now)
 
+
+def fold_rule_results(
+    outcomes: list[RuleBuildOutcome],
+    n: int,
+    fails: dict[str, int],
+    now: dt.datetime | None = None,
+) -> list[dict]:
+    """Result rows (name, status, message, last_update) from ``n``
+    documents and each applied rule's fail count, ``fails[name]``; the
+    statuses fold per group and overall."""
+    now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     rows: list[dict] = []
     group_status: dict[str, list[int]] = {}
     for o in outcomes:
         if o.column is None:
             status, msg = o.status, o.detail
         else:
-            nfail = counts[o.rule.name]
+            nfail = fails[o.rule.name]
             status = BAD if nfail else OK
             msg = f"{nfail}/{n} documents failed"
         rows.append(

@@ -15,8 +15,10 @@ Reference semantics (file:line into /root/reference):
 - result model (``dqmtools.py:75,96,99-104``): results are appended
   rows ``{name, result, message, last_update}`` with latest-per-name
   dedup ``sort_values('last_update').drop_duplicates(['name'])`` →
-  :class:`ResultsHistory` appends to a table; ``latest()`` is the O2
-  window dedup.
+  :class:`ResultsHistory` appends to a parquet table; ``latest()`` runs
+  that same pandas dedup over the collected history.
+- a submit's status (``dqmtools.py:106-120``) folds the grand-total
+  row of :func:`collect_rule_metrics` (:func:`dqmtools_spark.job.submit`).
 - S10 ASCII table sink (``dqmtools.py:157-171``, tabulate) →
   :func:`ascii_table` renders the (small, post-aggregation) results.
 """
@@ -25,13 +27,14 @@ from __future__ import annotations
 
 import datetime as dt
 import operator as _op
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Mapping
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from dqmtools_spark.operators.latest import latest_per_key
+from dqmtools_spark.pipeline import rule_metrics_aggs
 from dqmtools_spark.rules.core import QualityRule
 from dqmtools_spark.schemas import BAD, INVALID, OK, RULE_RESULTS_SCHEMA, WARNING
 from dqmtools_spark.sources.tables import read_table
@@ -106,64 +109,65 @@ def offenders(
 
 _STATUS_LABEL = {INVALID: "INVALID", BAD: "BAD", OK: "OK", WARNING: "WARNING"}
 
-RESULT_COLS = ["name", "status", "message", "last_update"]
+
+def collect_rule_metrics(
+    doc_results: DataFrame, rule_names: list[str]
+) -> tuple[pd.DataFrame, StructType]:
+    """The rule-metrics cube over ``doc_results`` (as
+    :func:`~dqmtools_spark.pipeline.rule_metrics_from_results`) in one
+    aggregate, collected, plus the ``rule_metrics`` table's schema.  The
+    rows carry ``_gid = grouping_id()``, 1 on the grand-total row alone:
+    documents whose ``lang_pred`` is NULL form a row with a NULL key too.
+    """
+    cube = doc_results.cube("lang_pred").agg(
+        *rule_metrics_aggs(rule_names), F.grouping_id().alias("_gid")
+    )
+    schema = StructType([f for f in cube.schema if f.name != "_gid"])
+    return cube.toPandas(), schema
 
 
 class ResultsHistory:
-    """Append-only run-result history with a latest-per-name view.
+    """Append-only run-result history in a parquet dir, with a
+    latest-per-name view (the reference keeps it in memory,
+    dqmtools.py:99-104)."""
 
-    Backed by a parquet dir when ``path`` is given, else an in-session
-    union (the reference keeps history in memory, dqmtools.py:99-104).
-    """
-
-    def __init__(self, spark: SparkSession, path: str | None = None):
+    def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        self._mem: DataFrame | None = None
 
     def append(self, rows: list[dict], now: dt.datetime | None = None) -> None:
         now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         rows = [{**r, "last_update": r.get("last_update", now)} for r in rows]
         # from pandas, so the rows cross over Arrow instead of being
         # pickled and decoded by a Python worker job
-        df = self.spark.createDataFrame(
-            pd.DataFrame(rows, columns=RESULT_COLS), RULE_RESULTS_SCHEMA
-        )
-        if self.path:
-            df.write.mode("append").parquet(self.path)
-        else:
-            self._mem = df if self._mem is None else self._mem.unionByName(df)
+        self.spark.createDataFrame(
+            pd.DataFrame(rows, columns=RULE_RESULTS_SCHEMA.fieldNames()),
+            RULE_RESULTS_SCHEMA,
+        ).write.mode("append").parquet(self.path)
 
     def all(self) -> DataFrame:
-        if self.path:
-            return read_table(self.spark, self.path, RULE_RESULTS_SCHEMA)
-        if self._mem is None:
-            return self.spark.createDataFrame([], RULE_RESULTS_SCHEMA)
-        return self._mem
+        return read_table(self.spark, self.path, RULE_RESULTS_SCHEMA)
 
     def latest(self) -> DataFrame:
-        """O2: one row per rule name, newest last_update wins."""
-        return latest_per_key(self.all(), ["name"], "last_update").orderBy("name")
+        """O2: one row per rule name, newest last_update wins, sorted by
+        name.  The history is a few rows per submit, so it is collected
+        once and deduplicated as the reference does
+        (``sort_values('last_update').drop_duplicates(['name'])``)."""
+        pdf = self.all().toPandas().sort_values("last_update", kind="stable")
+        pdf = pdf.drop_duplicates(["name"], keep="last").sort_values("name")
+        return self.spark.createDataFrame(pdf, RULE_RESULTS_SCHEMA)
 
 
-def ascii_table(results: DataFrame, show_last_update: bool = True) -> str:
-    """Render a (small) results DataFrame as an aligned ASCII table —
-    the reference's tabulate sink (dqmtools.py:157-171).  Collects;
-    callers pass post-aggregation frames only."""
-    rows = results.collect()
+def ascii_table(rows: Iterable[Mapping], show_last_update: bool = True) -> str:
+    """Render result rows (dicts or collected Rows) as an aligned ASCII
+    table — the reference's tabulate sink (dqmtools.py:157-171)."""
     headers = ["name", "status", "message"] + (
         ["last_update"] if show_last_update else []
     )
-    table = []
-    for r in rows:
-        rec = [
-            str(r["name"]),
-            _STATUS_LABEL.get(r["status"], str(r["status"])),
-            str(r["message"]),
-        ]
-        if show_last_update:
-            rec.append(str(r["last_update"]))
-        table.append(rec)
+    table = [
+        [str(_STATUS_LABEL.get(r[h], r[h]) if h == "status" else r[h]) for h in headers]
+        for r in rows
+    ]
     widths = [
         max(len(h), *(len(row[i]) for row in table)) if table else len(h)
         for i, h in enumerate(headers)

@@ -4,21 +4,22 @@ The reference renders per-channel matrices to image files for its
 display server (``wibeth_plots.py:92-93``, ``scripts/dqm_plotter.py:73``
 — matplotlib pcolormesh to PNG).  This is the engine-level rebuild with
 zero plotting dependencies: the aggregated metrics frame (always tiny —
-it is post-aggregation output) is collected to the driver and rasterized
-cell-by-cell with the pure-Python PNG encoder
+it is post-aggregation output), already collected to pandas, is
+rasterized cell-by-cell with the pure-Python PNG encoder
 (``functions/pngcodec.py``).  Color is a blue->white->red diverging ramp
 over the min..max of the matrix, each cell an (cell x cell)-pixel block
 with a 1-px grid line — readable without any viewer tooling beyond a
 browser.
 
-Driver-side collect is correct here by design: an image sink consumes a
+The sink takes a pandas frame by design: an image sink consumes a
 REPORT (per-group aggregates), never the row stream; the 100 TB path
-reduces first, renders last.
+reduces first, renders last.  The quality job renders the rule-metrics
+cube it has already collected (:func:`dqmtools_spark.job.submit`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pandas as pd
 
 from dqmtools_spark.functions.pngcodec import encode_png
 
@@ -64,28 +65,26 @@ def matrix_to_png(
 
 
 def write_metrics_png(
-    metrics: DataFrame,
+    metrics: pd.DataFrame,
     path: str,
     row_key: str,
-    value_cols: list[str] | None = None,
     cell: int = 16,
 ) -> tuple[int, int]:
-    """Render an aggregated metrics frame (one row per ``row_key``,
+    """Render a collected metrics frame (one row per ``row_key``,
     numeric columns as heatmap columns) to a PNG file; returns the
     image (width, height).  Rows sort by ``row_key`` (nulls last) for a
     deterministic image."""
-    cols = value_cols or [
-        f.name
-        for f in metrics.schema.fields
-        if f.name != row_key and f.dataType.typeName() in
-        ("integer", "long", "double", "float", "short", "decimal")
+    cols = [
+        c for c in metrics.columns if c != row_key
+        and pd.api.types.is_numeric_dtype(metrics[c])
+        and not pd.api.types.is_bool_dtype(metrics[c])
     ]
-    collected = sorted(
-        metrics.select(row_key, *cols).collect(),
-        key=lambda r: (r[row_key] is None, str(r[row_key])),
+    ordered = sorted(
+        metrics[[row_key, *cols]].to_dict("records"),
+        key=lambda r: (pd.isna(r[row_key]), str(r[row_key])),
     )
     matrix = [
-        [None if r[c] is None else float(r[c]) for c in cols] for r in collected
+        [None if pd.isna(r[c]) else float(r[c]) for c in cols] for r in ordered
     ]
     png = matrix_to_png(matrix, cell=cell)
     with open(path, "wb") as f:

@@ -156,7 +156,7 @@ def test_image_sink_renders_metrics_png(spark, tmp_path):
     metrics = rule_metrics_from_results(res, applied)
 
     path = str(tmp_path / "metrics.png")
-    w, h = write_metrics_png(metrics, path, row_key="lang_pred")
+    w, h = write_metrics_png(metrics.toPandas(), path, row_key="lang_pred")
     gw, gh, c, pix = decode_png(open(path, "rb").read())
     assert (gw, gh, c) == (w, h, 3)
     assert os.path.getsize(path) > 100

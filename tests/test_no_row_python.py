@@ -20,9 +20,8 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "dqmtools_spark"
 COLLECT_ALLOWED = {
     "sources/checkpoint.py",   # tiny progress/counter bookkeeping
     "rules/core.py",           # dataset-level fold: 1-row agg
-    "rules/report.py",         # ascii_table renders post-agg frames
+    "rules/report.py",         # the collected rule-metrics cube + history
     "operators/similarity.py", # query-vector .first() for knn entry
-    "sources/imagesink.py",    # image sink renders POST-AGG frames only
 }
 
 

@@ -61,8 +61,8 @@ def test_offenders_returns_failing_docs(spark):
     assert [r.asDict() for r in off.collect()] == [{"doc_id": 3, "wc": 3}]
 
 
-def test_results_history_latest_per_name(spark):
-    h = ResultsHistory(spark)
+def test_results_history_latest_per_name(spark, tmp_path):
+    h = ResultsHistory(spark, str(tmp_path / "hist"))
     t1 = dt.datetime(2024, 1, 1)
     t2 = dt.datetime(2024, 1, 2)
     h.append([{"name": "r1", "status": BAD, "message": "5/10 failed"}], now=t1)
@@ -78,7 +78,7 @@ def test_results_history_latest_per_name(spark):
     assert latest["r2"]["status"] == WARNING
     assert h.all().count() == 3
 
-    txt = ascii_table(h.latest())
+    txt = ascii_table(h.latest().collect())
     assert "r1" in txt and "OK" in txt and "WARNING" in txt
     assert txt.splitlines()[0].startswith("name")
 

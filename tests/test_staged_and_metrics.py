@@ -1,11 +1,9 @@
-"""Staged-checkpoint resumability + results-derived metrics + SimHash
-banding completeness (round-2 hardening).
+"""Staged-checkpoint resumability + SimHash banding completeness
+(round-2 hardening).
 
 - the durable text checkpoint must actually BE durable: a re-run with a
   complete checkpoint skips phase 1 (the expensive Python stage) and
   still produces identical results; force=True rebuilds.
-- rule_metrics_from_results (one scan of the written output) must equal
-  rule_metrics (live evaluated frame) exactly.
 - simhash_pairs with the default banding emits EXACTLY the brute-force
   set of pairs with Hamming <= max_hamming (pigeonhole recall 1.0).
 """
@@ -15,15 +13,8 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
-from dqmtools_spark.pipeline import (
-    rule_metrics,
-    rule_metrics_from_results,
-    run_pipeline,
-    run_pipeline_staged,
-    staged_checkpoint_complete,
-)
+from dqmtools_spark.pipeline import run_pipeline_staged, staged_checkpoint_complete
 from dqmtools_spark.synth import synth_pages
 
 
@@ -63,33 +54,6 @@ def test_half_written_checkpoint_is_rebuilt(spark, tmp_path):
     res, _ = run_pipeline_staged(spark, pages, ckpt, n_buckets=4)
     assert res.count() == 60
     assert staged_checkpoint_complete(spark, ckpt)
-
-
-def test_rule_metrics_from_results_matches_live(spark):
-    """The written doc_results carry everything the metrics cube needs
-    (reasons array); the cheap-scan variant must agree exactly with the
-    live-frame variant."""
-    from dqmtools_spark.pipeline import enrich_pages
-    from dqmtools_spark.rules.builtin import default_registry
-    from dqmtools_spark.rules.core import evaluate_rules
-
-    pages = synth_pages(spark, 300, seed=7)
-    registry = default_registry()
-    evaluated, outcomes = evaluate_rules(
-        enrich_pages(pages, spark, n_buckets=8), registry
-    )
-    applied = [o.rule.name for o in outcomes if o.column is not None]
-
-    live = rule_metrics(evaluated).toPandas()
-    results, _ = run_pipeline(spark, pages, n_buckets=8)
-    derived = rule_metrics_from_results(results, applied).toPandas()
-
-    key = ["lang_pred"]
-    live = live.fillna("<ALL>").sort_values(key).reset_index(drop=True)
-    derived = derived.fillna("<ALL>").sort_values(key).reset_index(drop=True)
-    assert sorted(live.columns) == sorted(derived.columns)
-    for c in sorted(live.columns):
-        assert list(live[c]) == list(derived[c]), c
 
 
 @pytest.mark.parametrize("max_hamming", [2, 6])
