@@ -39,10 +39,8 @@ _PROC_FIELDS = (
     ]
     + [T.StructField(f"hits_{k}", T.LongType()) for k in textproc.SCRUB_KINDS]
 )
-_PROC_SCHEMA = T.StructType(_PROC_FIELDS)
-
-# flat field order of the fused-UDF output (checkpoint schema)
-PROC_FIELD_NAMES = [f.name for f in _PROC_FIELDS]
+# the fused output's flat fields, in checkpoint order
+PROC_SCHEMA = T.StructType(_PROC_FIELDS)
 
 
 def _process_texts(texts: pd.Series, lm=None, langid_fn=None, ppl_fn=None) -> pd.DataFrame:
@@ -72,6 +70,14 @@ def _process_texts(texts: pd.Series, lm=None, langid_fn=None, ppl_fn=None) -> pd
     }
     data.update({f"hits_{k}": v for k, v in counters.items()})
     return pd.DataFrame(data)
+
+
+def process_pages(html: pd.Series, lm=None, langid_fn=None, ppl_fn=None) -> pd.DataFrame:
+    """HTML bytes -> the fused output frame: extract, then
+    :func:`_process_texts`."""
+    return _process_texts(
+        html.map(textproc.extract_text), lm=lm, langid_fn=langid_fn, ppl_fn=ppl_fn
+    )
 
 
 def make_process_udfs(lm=None, langid_fn=None, ppl_fn=None):
@@ -107,12 +113,11 @@ def make_process_udfs(lm=None, langid_fn=None, ppl_fn=None):
     ``tests/test_model_seam.py``.
     """
 
-    @F.pandas_udf(_PROC_SCHEMA)
+    @F.pandas_udf(PROC_SCHEMA)
     def page_udf(html: pd.Series) -> pd.DataFrame:
-        texts = html.map(textproc.extract_text)
-        return _process_texts(texts, lm=lm, langid_fn=langid_fn, ppl_fn=ppl_fn)
+        return process_pages(html, lm=lm, langid_fn=langid_fn, ppl_fn=ppl_fn)
 
-    @F.pandas_udf(_PROC_SCHEMA)
+    @F.pandas_udf(PROC_SCHEMA)
     def text_udf(text: pd.Series) -> pd.DataFrame:
         return _process_texts(text, lm=lm, langid_fn=langid_fn, ppl_fn=ppl_fn)
 

@@ -7,6 +7,15 @@ Two composable phases:
       -> process_page_udf(html)              -- extract + langid +
                                                 perplexity + scrub in
                                                 ONE Arrow round-trip
+    WARC input (an untransformed read_warc frame):
+    binaryFile scan(path, content)
+      -> ONE mapInPandas                     -- parse each file into
+                                                bounded page frames,
+                                                then extract + langid +
+                                                perplexity + scrub in
+                                                the same Python worker;
+                                                html never returns to
+                                                the JVM
   PHASE 2 (JVM codegen, zero Python):
       -> stats columns (regex expressions)
       -> broadcast join 5-row lang-threshold dim   (no shuffle)
@@ -31,22 +40,47 @@ submission, pipeline to report, is :func:`dqmtools_spark.job.submit`.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dqmtools_spark.functions import textstats
 from dqmtools_spark.functions.udfs import (
-    PROC_FIELD_NAMES,
+    PROC_SCHEMA,
     make_process_udfs,
     pii_hits_map_col,
     process_page_udf,
+    process_pages,
     process_text_udf,
 )
 from dqmtools_spark.rules.builtin import default_registry, join_lang_thresholds
 from dqmtools_spark.rules.core import RuleBuildOutcome, RuleRegistry, evaluate_rules
+from dqmtools_spark.schemas import PAGES_SCHEMA
 from dqmtools_spark.sources.tables import read_table, table_exists
+from dqmtools_spark.sources.warc import arrow_batch_rows, warc_page_frames
 
 DEFAULT_PART_BUCKETS = 64
+
+# the input columns phase 1 carries through beside the fused output
+_PASS_COLS = ["url", "warc_ts", "lang"]
+
+
+def _warc_one_pass(files: DataFrame, models: dict) -> DataFrame:
+    """Phase 1 straight from ``read_warc``'s binaryFile scan: each
+    task parses its files and scores every frame of pages in the same
+    Python worker, so ``html`` never goes back to the JVM."""
+    max_rows = arrow_batch_rows(files.sparkSession)
+    schema = T.StructType([PAGES_SCHEMA[c] for c in _PASS_COLS] + PROC_SCHEMA.fields)
+
+    def one_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pages in warc_page_frames(batches, max_rows):
+            proc = process_pages(pages["html"], **models)
+            yield pd.concat([pages[_PASS_COLS], proc], axis=1)
+
+    return files.mapInPandas(one_pass, schema=schema)
 
 
 def python_phase(
@@ -62,14 +96,22 @@ def python_phase(
     ``models`` injects real models through the swap point — a dict with
     optional keys ``lm`` and ``langid_fn`` passed to
     :func:`~dqmtools_spark.functions.udfs.make_process_udfs`.
+
+    An untransformed, uncached ``read_warc`` frame with
+    ``reextract=True`` takes one ``mapInPandas`` from the WARC bytes
+    (:func:`_warc_one_pass`); every other input takes the fused Arrow
+    UDF.  Both give the same rows and schema.
     """
+    files = df.__dict__.get("_warc_files")  # set by sources.warc.read_warc
+    if reextract and files is not None and not df.is_cached:
+        return _warc_one_pass(files, models or {})
     if models:
         page_udf, text_udf = make_process_udfs(**models)
     else:
         page_udf, text_udf = process_page_udf, process_text_udf
     proc = page_udf(F.col("html")) if reextract else text_udf(F.col("text"))
-    return df.select("url", "warc_ts", "lang", proc.alias("_proc")).select(
-        "url", "warc_ts", "lang", *[F.col(f"_proc.{f}").alias(f) for f in PROC_FIELD_NAMES]
+    return df.select(*_PASS_COLS, proc.alias("_proc")).select(
+        *_PASS_COLS, *[F.col(f"_proc.{f}").alias(f) for f in PROC_SCHEMA.fieldNames()]
     )
 
 

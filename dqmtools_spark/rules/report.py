@@ -139,11 +139,12 @@ class ResultsHistory:
         now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         rows = [{**r, "last_update": r.get("last_update", now)} for r in rows]
         # from pandas, so the rows cross over Arrow instead of being
-        # pickled and decoded by a Python worker job
+        # pickled and decoded by a Python worker job; one file per
+        # append, not one per Arrow slice
         self.spark.createDataFrame(
             pd.DataFrame(rows, columns=RULE_RESULTS_SCHEMA.fieldNames()),
             RULE_RESULTS_SCHEMA,
-        ).write.mode("append").parquet(self.path)
+        ).coalesce(1).write.mode("append").parquet(self.path)
 
     def all(self) -> DataFrame:
         return read_table(self.spark, self.path, RULE_RESULTS_SCHEMA)

@@ -11,7 +11,13 @@ ingest — they are pipeline OUTPUTS.
 Spark shape: ``spark.read.format("binaryFile")`` (one task per WARC
 file — Common Crawl segments are ~1 GiB, already the right task
 granule; 90k files = 90k tasks) -> ``mapInPandas`` exploding each
-file's records, Arrow-batched, shuffle-free.  Malformed members and
+file's records into frames of at most
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, parsed as each
+frame fills, shuffle-free.  The quality pipeline does not ship
+``html`` back to the JVM: ``pipeline.python_phase`` on a
+``read_warc`` frame runs this explode and the page scoring in the
+same ``mapInPandas`` (binaryFile -> one Python pass -> phase-1 rows,
+:func:`warc_page_frames` shared by both).  Malformed members and
 records are COUNTED AND SKIPPED, not raised: at 100 TB a corrupt
 member must cost one counter bump, not a stage retry
 (``_corrupt_members`` column when ``keep_stats=True``).
@@ -25,12 +31,16 @@ from __future__ import annotations
 
 import gzip
 import io
+import itertools
 import zlib
-from collections.abc import Iterator
+from collections.abc import Generator, Iterable, Iterator
 from datetime import datetime, timezone
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from dqmtools_spark.schemas import PAGES_SCHEMA
 
 
 # decompression-bomb guard for untrusted crawls: one WARC record
@@ -39,6 +49,14 @@ from pyspark.sql import DataFrame, SparkSession
 # claim ~1000x expansion and exhaust executor memory BEFORE the
 # MemoryError guard could catch anything)
 MAX_MEMBER_BYTES = 1 << 30  # 1 GiB
+
+# the per-file columns read_warc(keep_stats=True) adds
+_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("_source_file", T.StringType(), True),
+        T.StructField("_corrupt_members", T.IntegerType(), True),
+    ]
+)
 
 
 def split_gzip_members(
@@ -163,11 +181,10 @@ def _parse_warc_date(s: str | None) -> datetime | None:
         return None
 
 
-def warc_gz_to_pages(data: bytes) -> tuple[list[dict], int]:
-    """One .warc.gz file's bytes -> (page rows, corrupt member count).
-    Rows carry url/warc_ts/html; text/lang are None (pipeline
-    outputs)."""
-    rows: list[dict] = []
+def iter_warc_pages(data: bytes) -> Generator[dict, None, int]:
+    """One .warc.gz file's bytes -> its page rows, one at a time; the
+    generator returns the file's corrupt member count.  Rows carry
+    url/warc_ts/html; text/lang are None (pipeline outputs)."""
     corrupt = 0
     pos_iter = split_gzip_members(data)
     while True:
@@ -187,18 +204,66 @@ def warc_gz_to_pages(data: bytes) -> tuple[list[dict], int]:
                 except ValueError:
                     corrupt += 1
                     continue
-                rows.append(
-                    {
-                        "url": rec["uri"],
-                        "warc_ts": _parse_warc_date(rec["date"]),
-                        "html": body,
-                        "text": None,
-                        "lang": None,
-                    }
-                )
+                yield {
+                    "url": rec["uri"],
+                    "warc_ts": _parse_warc_date(rec["date"]),
+                    "html": body,
+                    "text": None,
+                    "lang": None,
+                }
         except ValueError:
             corrupt += 1
-    return rows, corrupt
+    return corrupt
+
+
+def warc_gz_to_pages(data: bytes) -> tuple[list[dict], int]:
+    """One .warc.gz file's bytes -> (page rows, corrupt member count):
+    :func:`iter_warc_pages` drained into a list."""
+    rows: list[dict] = []
+    pages = iter_warc_pages(data)
+    while True:
+        try:
+            rows.append(next(pages))
+        except StopIteration as done:
+            return rows, done.value
+
+
+def _chunks(rows: Iterable[dict], size: int | None) -> Iterator[list[dict]]:
+    """Consecutive lists of at most ``size`` rows (all rows when None)."""
+    rows = iter(rows)
+    while chunk := list(itertools.islice(rows, size)):
+        yield chunk
+
+
+def arrow_batch_rows(spark: SparkSession) -> int | None:
+    """``spark.sql.execution.arrow.maxRecordsPerBatch``, the row bound
+    of every frame a WARC explode yields; None when it is unlimited
+    (zero or negative)."""
+    n = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    return n if n > 0 else None
+
+
+def warc_page_frames(
+    files: Iterable[pd.DataFrame], max_rows: int | None, keep_stats: bool = False
+) -> Iterator[pd.DataFrame]:
+    """binaryFile batches (``path``, ``content``) -> pages frames of at
+    most ``max_rows`` rows, each from one file, in file order.  Rows
+    are parsed as the frame fills, so a 1 GiB segment is never one
+    pandas frame.  ``keep_stats`` adds ``_source_file`` and the file's
+    ``_corrupt_members`` to every row; that count is known only at the
+    end of the file, so this form holds a file's rows until then."""
+    cols = PAGES_SCHEMA.fieldNames() + (_STATS_SCHEMA.fieldNames() if keep_stats else [])
+    for batch in files:
+        for path, content in zip(batch["path"], batch["content"]):
+            if keep_stats:
+                rows, corrupt = warc_gz_to_pages(bytes(content))
+                for r in rows:
+                    r["_source_file"] = path
+                    r["_corrupt_members"] = corrupt
+            else:
+                rows = iter_warc_pages(bytes(content))
+            for chunk in _chunks(rows, max_rows):
+                yield pd.DataFrame(chunk, columns=cols)
 
 
 def read_warc(
@@ -206,38 +271,31 @@ def read_warc(
 ) -> DataFrame:
     """``*.warc.gz`` files under ``path`` -> pages DataFrame
     (PAGES_SCHEMA; + ``_source_file``/``_corrupt_members`` when
-    ``keep_stats``).  One Arrow task per file; no shuffle."""
-    from pyspark.sql import types as T
+    ``keep_stats``).  One Arrow task per file; no shuffle.
 
-    from dqmtools_spark.schemas import PAGES_SCHEMA
-
-    fields = list(PAGES_SCHEMA.fields)
+    Without ``keep_stats`` the returned frame records its binaryFile
+    scan as ``_warc_files``, so
+    :func:`~dqmtools_spark.pipeline.python_phase` can parse and score
+    the files in one Python pass; any transformation returns a new
+    frame without it."""
+    schema = PAGES_SCHEMA
     if keep_stats:
-        fields = fields + [
-            T.StructField("_source_file", T.StringType(), True),
-            T.StructField("_corrupt_members", T.IntegerType(), True),
-        ]
-    schema = T.StructType(fields)
-
-    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            for _, file_row in pdf.iterrows():
-                rows, corrupt = warc_gz_to_pages(bytes(file_row["content"]))
-                if keep_stats:
-                    for r in rows:
-                        r["_source_file"] = file_row["path"]
-                        r["_corrupt_members"] = corrupt
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return (
+        schema = T.StructType(PAGES_SCHEMA.fields + _STATS_SCHEMA.fields)
+    files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc.gz")
         .load(path)
         .select("path", "content")
-        .mapInPandas(explode, schema=schema)
     )
+    max_rows = arrow_batch_rows(spark)
+
+    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return warc_page_frames(batches, max_rows, keep_stats)
+
+    pages = files.mapInPandas(explode, schema=schema)
+    if not keep_stats:
+        pages._warc_files = files
+    return pages
 
 
 # ------------------------------------------------------------ fixture

@@ -40,6 +40,31 @@ def test_pipeline_plan_one_python_stage_no_shuffle(spark):
     assert len(re.findall(r"ArrowEvalPython \(\d+\)", plan)) == 1, "UDFs not fused"
 
 
+def test_warc_pipeline_plan_one_map_in_pandas_no_shuffle(spark, tmp_path):
+    """WARC input: binaryFile scan -> ONE mapInPandas that parses and
+    scores the pages -> codegen rules -> broadcast threshold join.  No
+    ArrowEvalPython: html never crosses back to the JVM."""
+    import re
+
+    from dqmtools_spark.pipeline import run_pipeline
+    from dqmtools_spark.sources.warc import read_warc, write_warc_gz
+
+    d = tmp_path / "warcs"
+    d.mkdir()
+    (d / "seg.warc.gz").write_bytes(
+        write_warc_gz([{"uri": "https://a.example/", "body": b"<html>hi</html>"}])
+    )
+    result, _ = run_pipeline(spark, read_warc(spark, str(d)))
+    audit = plan_audit(result)
+    assert audit["python_evals"] == 1, audit
+    assert audit["row_python_evals"] == 0, audit
+    assert audit["shuffle_exchanges"] == 0, audit
+    assert audit["broadcast_joins"] >= 1, audit
+    plan = explain_str(result)
+    assert len(re.findall(r"MapInPandas \(\d+\)", plan)) == 1
+    assert len(re.findall(r"ArrowEvalPython \(\d+\)", plan)) == 0
+
+
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     q = li.filter(F.col("l_quantity") > 30).select("l_orderkey", "l_quantity")

@@ -85,8 +85,16 @@ def test_results_history_latest_per_name(spark, tmp_path):
 
 def test_results_history_parquet_roundtrip(spark, tmp_path):
     h = ResultsHistory(spark, path=str(tmp_path / "hist"))
-    h.append([{"name": "r1", "status": OK, "message": "ok"}])
+
+    def n_files():
+        return len(list((tmp_path / "hist").glob("*.parquet")))
+
+    # enough rows that the frame spans several Arrow slices: each
+    # append still adds one file
+    h.append([{"name": f"r{i}", "status": OK, "message": "ok"} for i in range(1, 41)])
+    assert n_files() == 1
     h.append([{"name": "r1", "status": BAD, "message": "later"},],
              now=dt.datetime(2030, 1, 1))
-    assert h.all().count() == 2
+    assert n_files() == 2
+    assert h.all().count() == 41
     assert h.latest().first()["message"] == "later"
