@@ -7,7 +7,7 @@ and KenLM-style n-gram perplexity scoring run inside vectorized
 pandas/Arrow UDFs": genuinely *trained* artifacts in the two standard
 interchange formats, plus pure-Python loaders (the sandbox has neither
 the ``fasttext`` nor the ``kenlm`` wheel), wired through the proven
-injection seam ``udfs.make_process_udfs`` (tests/test_model_seam.py).
+injection seam ``pipeline.python_phase(models=...)`` (tests/test_model_seam.py).
 
 Two artifact families:
 
@@ -175,7 +175,7 @@ class ArpaLM:
 
     def text_perplexity(self, text: str | None) -> float | None:
         """10^(-mean log10 p) over the text's tokens (None for empty) —
-        the drop-in ``ppl_fn`` for ``make_process_udfs``."""
+        the drop-in ``ppl_fn`` for ``python_phase(models=...)``."""
         if not text:
             return None
         toks = tokenize(text)

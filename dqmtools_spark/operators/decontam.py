@@ -58,17 +58,3 @@ def contamination_flags(
         .groupBy(id_col)
         .agg(F.count_distinct("_g").alias("n_contaminated_grams"))
     )
-
-
-def drop_contaminated(
-    corpus: DataFrame,
-    eval_set: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 8,
-) -> DataFrame:
-    """Decontaminated corpus: anti-join away every flagged document."""
-    flagged = contamination_flags(corpus, eval_set, text_col, id_col, n).select(
-        id_col
-    )
-    return corpus.join(flagged, on=id_col, how="left_anti")

@@ -447,18 +447,6 @@ def minhash_lsh_pairs_md5(
     return _finish_eager(out, [base, sigs]) if eager else out
 
 
-def drop_near_duplicates(df: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
-    """Keep-first policy: drop any row whose id appears as the LARGER
-    member of a duplicate pair (deterministic, order-free).
-
-    NOTE: pairwise — a chain a~b, b~c keeps a and c even though they
-    belong to one duplicate cluster.  For transitive semantics use
-    :func:`connected_components` + :func:`drop_duplicate_clusters`.
-    """
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, on=id_col, how="left_anti")
-
-
 def connected_components(
     pairs: DataFrame, max_iters: int = 20
 ) -> DataFrame:
@@ -590,8 +578,8 @@ def drop_duplicate_clusters(
     df: DataFrame, pairs: DataFrame, id_col: str, max_iters: int = 20
 ) -> DataFrame:
     """Keep exactly one representative (the smallest id) per duplicate
-    CLUSTER — the transitive version of :func:`drop_near_duplicates`.
-    Rows with a NULL id are kept.
+    CLUSTER (transitively: a chain a~b, b~c is one cluster).  Rows with
+    a NULL id are kept.
 
     A pair list of at most ``DRIVER_CLUSTER_BOUND`` rows with integral
     or string ids is finished on the driver: one job collects it (at

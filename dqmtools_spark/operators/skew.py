@@ -87,24 +87,3 @@ def salted_agg(
 
     partials = salted.groupBy(*keys, "_salt").agg(*partial_cols)
     return partials.groupBy(*keys).agg(*merge_cols)
-
-
-def heavy_hitters(
-    df: DataFrame,
-    key: str,
-    unit_col: str,
-    min_fraction: float = 0.01,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Keys holding >= min_fraction of all rows (skew diagnostics).
-
-    Uses the salted path itself so the diagnostic doesn't trip over the
-    very skew it measures.
-    """
-    counts = salted_agg(df, [key], {"n": ("count", "*")}, unit_col, n_salts)
-    total = counts.agg(F.sum("n")).first()[0] or 1
-    return (
-        counts.withColumn("fraction", F.col("n").cast("double") / F.lit(float(total)))
-        .filter(F.col("fraction") >= min_fraction)
-        .orderBy(F.desc("n"), F.asc(key))
-    )

@@ -2,20 +2,16 @@
 
 Two composable phases:
 
-  PHASE 1 (Python, one fused Arrow stage):
-    scan(url, warc_ts, html, lang)           -- column-pruned to html
-      -> process_page_udf(html)              -- extract + langid +
-                                                perplexity + scrub in
-                                                ONE Arrow round-trip
-    WARC input (an untransformed read_warc frame):
-    binaryFile scan(path, content)
-      -> ONE mapInPandas                     -- parse each file into
-                                                bounded page frames,
-                                                then extract + langid +
-                                                perplexity + scrub in
-                                                the same Python worker;
-                                                html never returns to
-                                                the JVM
+  PHASE 1 (Python, ONE mapInArrow for every input):
+    pages: scan(url, warc_ts, lang, html)    -- column-pruned
+    WARC:  binaryFile scan(path, content)    -- an untransformed
+                                                read_warc frame; each
+                                                file parsed into
+                                                bounded page frames in
+                                                the same pass, so html
+                                                never returns to the JVM
+      -> extract + langid + perplexity + scrub over each Arrow batch;
+         url/warc_ts/lang pass through as the batch's own arrays
   PHASE 2 (JVM codegen, zero Python):
       -> stats columns (regex expressions)
       -> broadcast join 5-row lang-threshold dim   (no shuffle)
@@ -43,18 +39,18 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from dqmtools_spark.functions import textstats
 from dqmtools_spark.functions.udfs import (
     PROC_SCHEMA,
-    make_process_udfs,
+    _process_texts,
     pii_hits_map_col,
-    process_page_udf,
     process_pages,
-    process_text_udf,
 )
 from dqmtools_spark.rules.builtin import default_registry, join_lang_thresholds
 from dqmtools_spark.rules.core import RuleBuildOutcome, RuleRegistry, evaluate_rules
@@ -68,51 +64,94 @@ DEFAULT_PART_BUCKETS = 64
 _PASS_COLS = ["url", "warc_ts", "lang"]
 
 
-def _warc_one_pass(files: DataFrame, models: dict) -> DataFrame:
-    """Phase 1 straight from ``read_warc``'s binaryFile scan: each
-    task parses its files and scores every frame of pages in the same
-    Python worker, so ``html`` never goes back to the JVM."""
-    max_rows = arrow_batch_rows(files.sparkSession)
-    schema = T.StructType([PAGES_SCHEMA[c] for c in _PASS_COLS] + PROC_SCHEMA.fields)
-
-    def one_pass(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pages in warc_page_frames(batches, max_rows):
-            proc = process_pages(pages["html"], **models)
-            yield pd.concat([pages[_PASS_COLS], proc], axis=1)
-
-    return files.mapInPandas(one_pass, schema=schema)
-
-
 def python_phase(
     df: DataFrame, reextract: bool = True, models: dict | None = None
 ) -> DataFrame:
     """PHASE 1: pages -> flat (url, warc_ts, lang, text_ex, lang_pred,
     perplexity, scrubbed_text, hits_*) — all Python work of the
-    pipeline, one fused Arrow stage, flattened so the result can be
+    pipeline in ONE ``mapInArrow``, flat so the result can be
     checkpointed to parquet as-is.
 
     ``reextract=True`` recomputes text from html (the byte-identical
-    invariant path); False trusts the incoming ``text`` column.
-    ``models`` injects real models through the swap point — a dict with
-    optional keys ``lm`` and ``langid_fn`` passed to
-    :func:`~dqmtools_spark.functions.udfs.make_process_udfs`.
+    invariant path, :func:`~dqmtools_spark.functions.udfs.process_pages`);
+    False trusts the incoming ``text`` column
+    (:func:`~dqmtools_spark.functions.udfs._process_texts`).
 
-    An untransformed, uncached ``read_warc`` frame with
-    ``reextract=True`` takes one ``mapInPandas`` from the WARC bytes
-    (:func:`_warc_one_pass`); every other input takes the fused Arrow
-    UDF.  Both give the same rows and schema.
+    Only the source of the Arrow batches differs.  An untransformed,
+    uncached ``read_warc`` frame with ``reextract=True`` feeds its
+    binaryFile scan through
+    :func:`~dqmtools_spark.sources.warc.warc_page_frames`, so each worker
+    parses its files and scores the pages in the same pass and html
+    never goes back to the JVM.  Any other input feeds
+    ``select(url, warc_ts, lang, html | text)``, and its ``url``,
+    ``warc_ts`` and ``lang`` go back out as the input batch's own Arrow
+    arrays, never converted, so any timestamp type or range passes
+    untouched.  The output keeps the source's fields for those three
+    columns; the scored columns follow as ``PROC_SCHEMA``.
+
+    ``models`` is THE model swap point: a dict with optional keys that
+    replace the deterministic stand-ins.
+
+    - ``lm``: a ``(logprob_dict, oov_logprob)`` pair, the shape
+      :func:`textproc.lm_and_oov` returns — swap in a real KenLM-style
+      table here (load it driver-side; the closure ships it to workers
+      via cloudpickle, or broadcast it first for very large tables).
+    - ``langid_fn``: ``text -> lang_code`` callable — swap in a real
+      fastText ``model.predict`` wrapper here.  Must be picklable.
+    - ``ppl_fn``: ``text -> float | None`` callable overriding the
+      whole perplexity computation (takes precedence over ``lm``) —
+      the hook for a full backoff LM like
+      :class:`~dqmtools_spark.functions.models.ArpaLM.text_perplexity`,
+      whose scoring recursion doesn't fit the flat dict shape.
+
+    Batch protocol: when both ``langid_fn`` and ``ppl_fn`` also have a
+    ``batch(token_lists)`` method, each Arrow batch is tokenized once
+    (``text.lower().split()``, ``None`` for a missing or empty text)
+    and each model scores the whole batch in one call, returning one
+    value per text equal to what the per-text call returns.  The
+    path-loaded models (``models.langid_fn_from_path`` and
+    ``models.ppl_fn_from_path``) have it; any other callable is called
+    once per text.
+
+    Without ``models`` the lazy per-executor singletons are used, so
+    nothing is shipped in the closure.  The injection reaches the
+    Python WORKERS (not just the driver) because the captured objects
+    ride the serialized closure — asserted by
+    ``tests/test_model_seam.py``.
     """
+    models = models or {}
     files = df.__dict__.get("_warc_files")  # set by sources.warc.read_warc
     if reextract and files is not None and not df.is_cached:
-        return _warc_one_pass(files, models or {})
-    if models:
-        page_udf, text_udf = make_process_udfs(**models)
+        source, fields = files, [PAGES_SCHEMA[c] for c in _PASS_COLS]
+        max_rows = arrow_batch_rows(df.sparkSession)
+        pass_schema = to_arrow_schema(T.StructType(fields))
+
+        def frames(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[list, pd.Series]]:
+            for pages in warc_page_frames((b.to_pandas() for b in batches), max_rows):
+                passed = pa.RecordBatch.from_pandas(
+                    pages[_PASS_COLS], pass_schema, preserve_index=False
+                )
+                yield passed.columns, pages["html"]
+
     else:
-        page_udf, text_udf = process_page_udf, process_text_udf
-    proc = page_udf(F.col("html")) if reextract else text_udf(F.col("text"))
-    return df.select(*_PASS_COLS, proc.alias("_proc")).select(
-        *_PASS_COLS, *[F.col(f"_proc.{f}").alias(f) for f in PROC_SCHEMA.fieldNames()]
-    )
+        source = df.select(*_PASS_COLS, "html" if reextract else "text")
+        fields = [df.schema[c] for c in _PASS_COLS]
+
+        def frames(batches: Iterator[pa.RecordBatch]) -> Iterator[tuple[list, pd.Series]]:
+            for b in batches:
+                yield b.columns[:-1], b.columns[-1].to_pandas()
+
+    score = process_pages if reextract else _process_texts
+    proc_schema = to_arrow_schema(PROC_SCHEMA)
+    schema = T.StructType(fields + PROC_SCHEMA.fields)
+
+    def phase1(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for passed, texts in frames(batches):
+            proc = score(texts, **models)
+            scored = pa.RecordBatch.from_pandas(proc, proc_schema, preserve_index=False)
+            yield pa.RecordBatch.from_arrays(passed + scored.columns, schema.fieldNames())
+
+    return source.mapInArrow(phase1, schema)
 
 
 def jvm_phase(

@@ -46,7 +46,8 @@ def plan_audit(df: DataFrame) -> dict[str, int]:
         + nodes("CartesianProduct"),
         "python_evals": nodes("ArrowEvalPython")
         + nodes("BatchEvalPython")
-        + nodes("MapInPandas"),
+        + nodes("MapInPandas")
+        + nodes("MapInArrow"),
         "row_python_evals": nodes("BatchEvalPython"),
         "pushed_filters": plan.count("PushedFilters: ["),
     }

@@ -15,8 +15,8 @@ file's records into frames of at most
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, parsed as each
 frame fills, shuffle-free.  The quality pipeline does not ship
 ``html`` back to the JVM: ``pipeline.python_phase`` on a
-``read_warc`` frame runs this explode and the page scoring in the
-same ``mapInPandas`` (binaryFile -> one Python pass -> phase-1 rows,
+``read_warc`` frame runs this explode and the page scoring in one
+``mapInArrow`` (binaryFile -> one Python pass -> phase-1 rows,
 :func:`warc_page_frames` shared by both).  Malformed members and
 records are COUNTED AND SKIPPED, not raised: at 100 TB a corrupt
 member must cost one counter bump, not a stage retry

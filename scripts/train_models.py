@@ -12,7 +12,7 @@ Produces, deterministically (fixed seeds, no network, no external data):
 
 Run ``python scripts/train_models.py`` to regenerate; the tests in
 ``tests/test_models.py`` load the committed files and push them through
-the pipeline's model seam (``udfs.make_process_udfs``).
+the pipeline's model seam (``pipeline.python_phase(models=...)``).
 
 This mirrors the production shape: at 10^12-doc scale the models are
 pretrained artifacts distributed to executors, never fit in-line — so

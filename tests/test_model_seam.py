@@ -1,6 +1,6 @@
 """The model swap point must be REAL, not documentation (VERDICT r2
 item 7): injecting a different langid / LM through
-``make_process_udfs`` must change what the Python WORKERS compute —
+``python_phase(models=...)`` must change what the Python WORKERS compute —
 proving the closure-captured models reach the executors, which is
 exactly how a real fastText / KenLM model would ride in.
 """

@@ -1,6 +1,6 @@
 """Real trained artifacts through the model seam (VERDICT r3 item 3).
 
-The seam (``udfs.make_process_udfs``) has so far only carried stand-ins.
+The seam (``pipeline.python_phase(models=...)``) has so far only carried stand-ins.
 These tests put the COMMITTED, genuinely-trained artifacts through it:
 
 - ``artifacts/langid_synth.bin`` — fastText supervised classifier in

@@ -2,7 +2,8 @@
 input_hint bans per-row Python.  Grep the package for the banned
 constructs so a regression fails CI, not a 100 TB run.
 
-Allowed: @F.pandas_udf (vectorized), mapInPandas (Arrow batches).
+Allowed: @F.pandas_udf (vectorized), mapInPandas and mapInArrow (Arrow
+batches).
 Banned in dqmtools_spark/: F.udf( / udf( row UDFs, .rdd access
 (except the documented partition-count probe), driver-side .collect()
 in operator modules (collect belongs to reports/checkpoint bookkeeping,

@@ -60,19 +60,19 @@ def test_langid_identical(joined):
 
 
 def test_extraction_matches_pages_text(spark):
-    """Re-extracted text (pandas UDF over html) == the table's text
-    column, byte for byte — the per-url invariant from input_hint."""
+    """Re-extracted text (phase 1's ``text_ex`` from html) == the
+    table's text column, byte for byte — the per-url invariant from
+    input_hint."""
     from pyspark.sql import functions as F
 
-    from dqmtools_spark.functions.udfs import extract_text_udf
+    from dqmtools_spark.pipeline import python_phase
 
     pages = synth_pages(spark, 200, seed=SEED)
-    bad = (
-        pages.withColumn("re_ex", extract_text_udf(F.col("html")))
-        .filter(~F.col("re_ex").eqNullSafe(F.col("text")))
-        .count()
+    both = python_phase(pages).select("url", "text_ex").join(
+        pages.select("url", "text"), "url"
     )
-    assert bad == 0
+    assert both.count() == 200
+    assert both.filter(~F.col("text_ex").eqNullSafe(F.col("text"))).count() == 0
 
 
 def test_synth_is_partitioning_invariant(spark):

@@ -18,34 +18,47 @@ from pyspark.sql import functions as F
 from dqmtools_spark.plans.audit import explain_str, plan_audit
 
 
-def test_pipeline_plan_one_python_stage_no_shuffle(spark):
-    """The per-doc pipeline must be: scan -> ONE fused Arrow stage ->
-    codegen rules -> broadcast threshold join.  Zero shuffle exchanges
-    (the only exchange in production is the partitioned write)."""
+def _python_node_counts(df) -> dict[str, int]:
+    """Tree-form counts ("Node (n)") of the Python evaluation nodes;
+    formatted mode prints each node twice (tree + detail)."""
+    import re
+
+    plan = explain_str(df)
+    return {
+        n: len(re.findall(rf"{n} \(\d+\)", plan))
+        for n in ("MapInArrow", "MapInPandas", "ArrowEvalPython")
+    }
+
+
+ONE_MAP_IN_ARROW = {"MapInArrow": 1, "MapInPandas": 0, "ArrowEvalPython": 0}
+
+
+def test_pipeline_plan_one_python_stage_no_shuffle(spark, tmp_path):
+    """The per-doc pipeline over a pages table must be: scan -> ONE
+    fused ``mapInArrow`` -> codegen rules -> broadcast threshold join.
+    Zero shuffle exchanges (the only exchange in production is the
+    partitioned write).  The synth pages are written to parquet first,
+    so their own generator is not in the plan."""
     from dqmtools_spark.pipeline import run_pipeline
+    from dqmtools_spark.schemas import PAGES_SCHEMA
+    from dqmtools_spark.sources.tables import read_table
     from dqmtools_spark.synth import synth_pages
 
-    pages = synth_pages(spark, 50, seed=1)
-    result, _ = run_pipeline(spark, pages)
+    path = str(tmp_path / "pages")
+    synth_pages(spark, 50, seed=1).write.parquet(path)
+    result, _ = run_pipeline(spark, read_table(spark, path, PAGES_SCHEMA))
     audit = plan_audit(result)
+    assert audit["python_evals"] == 1, audit
     assert audit["row_python_evals"] == 0, "row-at-a-time Python in hot path"
     assert audit["shuffle_exchanges"] == 0, "unexpected shuffle in per-doc path"
     assert audit["broadcast_joins"] >= 1, "lang-threshold dim not broadcast"
-    import re
-
-    plan = explain_str(result)
-    # the fused UDF keeps Python crossings to a single ArrowEvalPython
-    # node (formatted mode prints each node twice: tree + detail, so
-    # match the tree form "ArrowEvalPython (n)")
-    assert len(re.findall(r"ArrowEvalPython \(\d+\)", plan)) == 1, "UDFs not fused"
+    assert _python_node_counts(result) == ONE_MAP_IN_ARROW, "phase 1 not one pass"
 
 
-def test_warc_pipeline_plan_one_map_in_pandas_no_shuffle(spark, tmp_path):
-    """WARC input: binaryFile scan -> ONE mapInPandas that parses and
+def test_warc_pipeline_plan_one_map_in_arrow_no_shuffle(spark, tmp_path):
+    """WARC input: binaryFile scan -> ONE mapInArrow that parses and
     scores the pages -> codegen rules -> broadcast threshold join.  No
-    ArrowEvalPython: html never crosses back to the JVM."""
-    import re
-
+    other Python node: html never crosses back to the JVM."""
     from dqmtools_spark.pipeline import run_pipeline
     from dqmtools_spark.sources.warc import read_warc, write_warc_gz
 
@@ -60,9 +73,7 @@ def test_warc_pipeline_plan_one_map_in_pandas_no_shuffle(spark, tmp_path):
     assert audit["row_python_evals"] == 0, audit
     assert audit["shuffle_exchanges"] == 0, audit
     assert audit["broadcast_joins"] >= 1, audit
-    plan = explain_str(result)
-    assert len(re.findall(r"MapInPandas \(\d+\)", plan)) == 1
-    assert len(re.findall(r"ArrowEvalPython \(\d+\)", plan)) == 0
+    assert _python_node_counts(result) == ONE_MAP_IN_ARROW
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):

@@ -1,9 +1,11 @@
 """WARC input through phase 1 in one Python pass.
 
-``python_phase`` on an untransformed ``read_warc`` frame parses the
-files and scores the pages in one ``mapInPandas``; every other input
-takes the fused ``ArrowEvalPython`` UDF.  The two must give the same
-rows: ``text_ex`` and ``scrubbed_text`` byte-identical, ``lang_pred``,
+``python_phase`` is one ``mapInArrow`` for every input.  On an
+untransformed ``read_warc`` frame it reads the binaryFile scan, so
+the same pass parses the files and scores the pages; every other
+input (here ``read_warc``'s own ``mapInPandas`` explode behind a
+transformation) feeds it page rows.  The two must give the same rows:
+``text_ex`` and ``scrubbed_text`` byte-identical, ``lang_pred``,
 ``perplexity`` and ``hits_*`` equal.  The fixture holds several files,
 non-``response`` records, a non-HTTP payload and a truncated member.
 Both WARC explodes yield frames of at most
@@ -83,11 +85,14 @@ def warc_dir(tmp_path_factory):
 
 
 def _python_nodes(df) -> tuple[int, int]:
-    """(ArrowEvalPython, MapInPandas) node counts of ``df``'s plan."""
+    """(MapInPandas, MapInArrow) node counts of ``df``'s plan: the
+    ``read_warc`` explode and the phase-1 pass.  No plan here may hold
+    an ``ArrowEvalPython``."""
     plan = explain_str(df)
+    assert not re.findall(r"ArrowEvalPython \(\d+\)", plan)
     return (
-        len(re.findall(r"ArrowEvalPython \(\d+\)", plan)),
         len(re.findall(r"MapInPandas \(\d+\)", plan)),
+        len(re.findall(r"MapInArrow \(\d+\)", plan)),
     )
 
 
@@ -144,6 +149,8 @@ def test_one_pass_with_small_batches_equals_generic_path(spark, warc_dir):
 
 
 def test_other_inputs_keep_the_arrow_udf(spark, warc_dir):
+    """Every other input feeds page rows from ``read_warc``'s explode
+    to the phase-1 ``mapInArrow``."""
     pages = read_warc(spark, warc_dir)
     for df in (
         read_warc(spark, warc_dir, keep_stats=True),
@@ -155,7 +162,7 @@ def test_other_inputs_keep_the_arrow_udf(spark, warc_dir):
     assert _python_nodes(python_phase(pages, reextract=False)) == (1, 1)
     cached = read_warc(spark, warc_dir).cache()
     try:
-        assert _python_nodes(python_phase(cached))[0] == 1
+        assert _python_nodes(python_phase(cached)) == (1, 1)
     finally:
         cached.unpersist()
 
