@@ -1,4 +1,4 @@
-"""Heuristic text statistics as Spark SQL column expressions.
+"""Heuristic text statistics as Spark SQL expressions.
 
 Gopher/C4-style per-document quality signals, kept entirely JVM-side
 (whole-stage codegen; no Python in the hot path).  Analog of the
@@ -20,44 +20,13 @@ from dqmtools_spark.functions.textproc import LANG_MARKERS
 ALL_MARKERS = sorted(set().union(*LANG_MARKERS.values()))
 
 
-def words(text: Column) -> Column:
-    """Whitespace tokens (empty text -> empty array, not [''])."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
-
-
 def lines(text: Column) -> Column:
     return F.split(text, r"\n")
 
 
-def word_count(text: Column) -> Column:
-    """Count of whitespace-separated tokens.
-
-    ``regexp_count(\\S+)`` is a single codegen'd regex pass — no token
-    array materialization.  Identical to ``size(words(text))`` for any
-    input (a token IS a maximal \\S+ run)."""
-    return F.regexp_count(text, F.lit(r"\S+")).cast("long")
-
-
-def mean_word_len(text: Column) -> Column:
-    """Mean token length = (non-whitespace chars) / word_count.
-
-    Equivalent to averaging per-token lengths (tokens partition the
-    non-whitespace characters) but needs no array + aggregate HOF."""
-    wc = word_count(text)
-    non_ws = F.length(text) - F.regexp_count(text, F.lit(r"\s"))
-    return F.when(wc == 0, F.lit(None).cast("double")).otherwise(
-        non_ws.cast("double") / wc
-    )
-
-
-def symbol_ratio(text: Column) -> Column:
-    """Fraction of characters that are not letters/digits/whitespace."""
-    total = F.length(text)
-    syms = F.regexp_count(text, F.lit(r"[^\p{L}\p{N}\s]"))
-    return F.when(total == 0, F.lit(0.0)).otherwise(syms.cast("double") / total)
+def token_count_bpe_ish(text: Column) -> Column:
+    """BPE-ish token estimate: word pieces + standalone punctuation."""
+    return F.regexp_count(text, F.lit(r"\w+|[^\w\s]")).cast("long")
 
 
 # one compiled alternation over all marker words; token boundaries are
@@ -67,103 +36,68 @@ _MARKER_PATTERN = (
 )
 
 
-def stopword_fraction(text: Column) -> Column:
-    """Fraction of tokens that are (any-language) marker stop-words.
-
-    A 58-way ``array_contains`` per token is an interpreted HOF that
-    breaks whole-stage codegen; one regexp_count pass over the lowered
-    text counts the same token hits ~5x faster."""
-    wc = word_count(text)
-    hits = F.regexp_count(F.lower(text), F.lit(_MARKER_PATTERN))
-    return F.when(wc == 0, F.lit(0.0)).otherwise(hits.cast("double") / wc)
+def nonempty_lines_sql(text: str) -> str:
+    """SQL text of the lines of ``text`` that hold more than spaces.
+    The three line stats read it from an inner projection: each lambda
+    is a fresh variable, so the plan would split the text once per use."""
+    return rf"filter(split({text}, r'\n'), x -> length(trim(x)) > 0)"
 
 
-def repeated_line_fraction(text: Column) -> Column:
-    """1 - distinct/total over non-empty lines (boilerplate detector)."""
-    ls = F.filter(lines(text), lambda x: F.length(F.trim(x)) > 0)
-    return F.when(F.size(ls) == 0, F.lit(0.0)).otherwise(
-        1.0 - F.size(F.array_distinct(ls)).cast("double") / F.size(ls)
-    )
+def all_stats(text: str, lines: str) -> list[str]:
+    """The stat bundle the rule layer consumes, as ``<sql> AS <name>``
+    strings over the text column ``text`` and the column ``lines``
+    holding :func:`nonempty_lines_sql` of it.
 
+    Every token stat is one ``regexp_count`` pass, never a per-token
+    higher-order function: those are interpreted and break
+    whole-stage codegen.  A token is a maximal ``\\S+`` run, so
+    ``word_count`` equals the size of the whitespace split, and the
+    mean token length is (non-whitespace chars) / word_count."""
+    wc = rf"CAST(regexp_count({text}, r'\S+') AS BIGINT)"
 
-def alpha_word_fraction(text: Column) -> Column:
-    """Fraction of tokens containing at least one letter.
+    def per_word(num: str) -> str:
+        return f"CASE WHEN {wc} = 0 THEN 0.0D ELSE CAST({num} AS DOUBLE) / {wc} END"
 
-    Counted as 1 - (letterless tokens)/wc: a token is letterless iff it
-    matches ``[^\\s\\p{L}]+`` between whitespace boundaries — one regex
-    pass instead of a per-token rlike HOF."""
-    wc = word_count(text)
-    non_alpha = F.regexp_count(
-        text, F.lit(r"(?:(?<=\s)|^)[^\s\p{L}]+(?=\s|$)")
-    )
-    return F.when(wc == 0, F.lit(0.0)).otherwise(
-        (wc - non_alpha).cast("double") / wc
-    )
-
-
-def token_count_bpe_ish(text: Column) -> Column:
-    """BPE-ish token estimate: word pieces + standalone punctuation."""
-    return F.regexp_count(text, F.lit(r"\w+|[^\w\s]")).cast("long")
-
-
-def doc_fingerprint(text: Column) -> Column:
-    """Deterministic 64-bit document fingerprint (rolling-hash analog)."""
-    return F.xxhash64(text)
-
-
-def all_stats(text: Column) -> dict[str, Column]:
-    """The full stat bundle the rule layer consumes."""
-    return {
-        "word_count": word_count(text),
-        "mean_word_len": mean_word_len(text),
-        "symbol_ratio": symbol_ratio(text),
-        "stopword_fraction": stopword_fraction(text),
-        "repeated_line_fraction": repeated_line_fraction(text),
-        "alpha_word_fraction": alpha_word_fraction(text),
-        "ellipsis_line_fraction": ellipsis_line_fraction(text),
-        "bullet_line_fraction": bullet_line_fraction(text),
-        "has_curly_brace": has_curly_brace(text),
-    }
-
-
-def _nonempty_lines(text: Column) -> Column:
-    return F.filter(lines(text), lambda x: F.length(F.trim(x)) > 0)
-
-
-def ellipsis_line_fraction(text: Column) -> Column:
-    """Gopher signal: fraction of lines ending in an ellipsis
-    (truncated boilerplate/nav text)."""
-    ls = _nonempty_lines(text)
-    hits = F.size(
-        F.filter(ls, lambda x: x.endswith("...") | x.endswith("…"))
-    )
-    return F.when(F.size(ls) == 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / F.size(ls)
-    )
-
-
-def bullet_line_fraction(text: Column) -> Column:
-    """Gopher signal: fraction of lines that are bullet items."""
-    ls = _nonempty_lines(text)
-    hits = F.size(
-        F.filter(
-            ls,
-            lambda x: x.startswith("- ") | x.startswith("* ") | x.startswith("• "),
+    def per_line(pred: str) -> str:
+        return (
+            f"CASE WHEN size({lines}) = 0 THEN 0.0D "
+            f"ELSE CAST(size(filter({lines}, x -> {pred})) AS DOUBLE) / size({lines}) END"
         )
-    )
-    return F.when(F.size(ls) == 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / F.size(ls)
-    )
 
-
-def has_curly_brace(text: Column) -> Column:
-    """C4 signal: '{' almost always means leaked code/templating."""
-    return F.contains(text, F.lit("{"))
+    return [
+        f"{wc} AS word_count",
+        f"CASE WHEN {wc} = 0 THEN CAST(NULL AS DOUBLE) ELSE "
+        rf"CAST(length({text}) - regexp_count({text}, r'\s') AS DOUBLE) / {wc} END"
+        " AS mean_word_len",
+        # fraction of characters that are not letters, digits or whitespace
+        f"CASE WHEN length({text}) = 0 THEN 0.0D ELSE "
+        rf"CAST(regexp_count({text}, r'[^\p{{L}}\p{{N}}\s]') AS DOUBLE) / length({text}) END"
+        " AS symbol_ratio",
+        # (any-language) marker stop-words: a 58-way array_contains per
+        # token is an interpreted HOF; one pass over the lowered text
+        # counts the same token hits ~5x faster
+        per_word(f"regexp_count(lower({text}), r'{_MARKER_PATTERN}')") + " AS stopword_fraction",
+        # 1 - distinct/total over non-empty lines (boilerplate detector)
+        f"CASE WHEN size({lines}) = 0 THEN 0.0D ELSE "
+        f"1.0D - CAST(size(array_distinct({lines})) AS DOUBLE) / size({lines}) END"
+        " AS repeated_line_fraction",
+        # tokens with a letter = wc - (letterless tokens); a letterless
+        # token is a [^\s\p{L}]+ run between whitespace boundaries
+        per_word(rf"{wc} - regexp_count({text}, r'(?:(?<=\s)|^)[^\s\p{{L}}]+(?=\s|$)')")
+        + " AS alpha_word_fraction",
+        # Gopher: lines ending in an ellipsis (truncated boilerplate/nav)
+        per_line("endswith(x, '...') OR endswith(x, '…')") + " AS ellipsis_line_fraction",
+        # Gopher: bullet-item lines
+        per_line("startswith(x, '- ') OR startswith(x, '* ') OR startswith(x, '• ')")
+        + " AS bullet_line_fraction",
+        # C4: '{' almost always means leaked code/templating
+        f"contains({text}, '{{') AS has_curly_brace",
+    ]
 
 
 def dedup_repeated_lines(text: Column) -> Column:
     """Gopher-style intra-document boilerplate REMOVAL (the transform
-    companion of :func:`repeated_line_fraction`'s signal): keep the
+    companion of the ``repeated_line_fraction`` stat): keep the
     FIRST occurrence of every exact line, preserving order, and
     reassemble with newlines.  Per-row, no shuffle.
 

@@ -20,7 +20,6 @@ No per-row Spark UDFs (``F.udf``) anywhere (BASELINE input_hint).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dqmtools_spark.functions import textproc
@@ -76,13 +75,3 @@ def process_pages(html: pd.Series, lm=None, langid_fn=None, ppl_fn=None) -> pd.D
     return _process_texts(
         html.map(textproc.extract_text), lm=lm, langid_fn=langid_fn, ppl_fn=ppl_fn
     )
-
-
-def pii_hits_map_col(prefix: str = "hits_") -> F.Column:
-    """Build the map<string,long> hits column from the flat per-kind
-    ``<prefix><kind>`` hit columns."""
-    pairs = []
-    for k in textproc.SCRUB_KINDS:
-        pairs.append(F.lit(k))
-        pairs.append(F.col(f"{prefix}{k}"))
-    return F.create_map(*pairs)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dqmtools_spark.sqltext import sql_ident, sql_str
 
 # ---------------------------------------------------------------- exact
 
@@ -49,7 +50,7 @@ def _sql_of(col: F.Column | str) -> str:
     Column renders as its own SQL, so it must be one whose SQL form
     parses back (``F.col("text")``, ``F.lower("text")``)."""
     if isinstance(col, str):
-        return "`" + col.replace("`", "``") + "`"
+        return sql_ident(col)
     return col._jc.toString()
 
 
@@ -568,9 +569,8 @@ def _union_find_losers(edges) -> list:
 
 
 def _sql_literal(v) -> str:
-    # string literals under the default spark.sql.parser.escapedStringLiterals
     if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return sql_str(v)
     return str(int(v))
 
 
@@ -675,31 +675,22 @@ def simhash_signatures(
         F.col(text_col).isNotNull().alias("_has"),
         F.explode_outer(toks).alias("_h"),
     )
-    one = F.lit(1).cast("long")
     # per-bit vote sum(+1/-1 over tokens) = 2*sum(bit_i) - n_tokens, so
     # aggregating the raw bit (one shift+and per bit, no CASE) and
     # comparing 2*s_i >= n gives bit-identical signatures at about half
-    # the per-row expression cost of the +-1 CASE form
-    votes = [
-        F.sum(F.shiftrightunsigned(F.col("_h"), i).bitwiseAND(one)).alias(f"_v{i}")
-        for i in range(n_bits)
-    ]
+    # the per-row expression cost of the +-1 CASE form.  The n_bits sums
+    # ride one array and the OR chain is one expression, both SQL text:
+    # a Column call per bit costs Py4J round trips per bit
+    votes = ", ".join(f"sum(shiftrightunsigned(_h, {i}) & 1L)" for i in range(n_bits))
     agg = ex.groupBy(id_col).agg(
-        F.max("_has").alias("_has"), F.count("_h").alias("_n"), *votes
+        F.max("_has").alias("_has"), F.count("_h").alias("_n"), F.expr(f"array({votes}) AS _v")
     )
-    sig = F.lit(0).cast("long")
-    for i in range(n_bits):
-        sig = sig.bitwiseOR(
-            F.when(F.col(f"_v{i}") * 2 >= F.col("_n"), F.shiftleft(one, i)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return agg.select(
-        F.col(id_col),
-        F.when(~F.col("_has"), F.lit(None).cast("long"))
-        .when(F.col("_n") == 0, F.lit(0).cast("long"))
-        .otherwise(sig)
-        .alias("_sig"),
+    sig = " | ".join(
+        f"CASE WHEN _v[{i}] * 2 >= _n THEN shiftleft(1L, {i}) ELSE 0L END" for i in range(n_bits)
+    )
+    return agg.selectExpr(
+        _sql_of(id_col),
+        f"CASE WHEN NOT _has THEN CAST(NULL AS BIGINT) WHEN _n = 0 THEN 0L ELSE {sig} END AS _sig",
     )
 
 

@@ -12,10 +12,11 @@ Two composable phases:
                                                 never returns to the JVM
       -> extract + langid + perplexity + scrub over each Arrow batch;
          url/warc_ts/lang pass through as the batch's own arrays
-  PHASE 2 (JVM codegen, zero Python):
-      -> stats columns (regex expressions)
-      -> broadcast join 5-row lang-threshold dim   (no shuffle)
-      -> rule columns -> reasons/keep              (same codegen stage)
+  PHASE 2 (JVM codegen, zero Python, no join; SQL text):
+      -> non-empty lines (inner projection)
+      -> stats + part_key + per-language thresholds (CASE lang_pred)
+      -> rule columns -> reasons/keep/quality_score/pii_hits
+                                                   (same codegen stage)
       -> write, repartitioned by part_key          (the ONLY shuffle)
 
 ``run_pipeline`` fuses both phases into one job (scan -> one narrow
@@ -46,15 +47,12 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from dqmtools_spark.functions import textstats
-from dqmtools_spark.functions.udfs import (
-    PROC_SCHEMA,
-    _process_texts,
-    pii_hits_map_col,
-    process_pages,
-)
-from dqmtools_spark.rules.builtin import default_registry, join_lang_thresholds
+from dqmtools_spark.functions.textproc import SCRUB_KINDS
+from dqmtools_spark.functions.udfs import PROC_SCHEMA, _process_texts, process_pages
+from dqmtools_spark.rules.builtin import default_registry, lang_threshold_sql
 from dqmtools_spark.rules.core import RuleBuildOutcome, RuleRegistry, evaluate_rules
 from dqmtools_spark.schemas import PAGES_SCHEMA
+from dqmtools_spark.sqltext import sql_ident, sql_str
 from dqmtools_spark.sources.tables import read_table, table_exists
 from dqmtools_spark.sources.warc import arrow_batch_rows, warc_page_frames
 
@@ -159,39 +157,41 @@ def jvm_phase(
     spark: SparkSession,
     n_buckets: int = DEFAULT_PART_BUCKETS,
 ) -> DataFrame:
-    """PHASE 2a: attach stats columns + partition key + per-lang
-    thresholds — pure whole-stage-codegen expressions over phase-1
-    output (fresh from the UDF or re-read from a checkpoint)."""
-    df = processed
-    stats = textstats.all_stats(F.col("text_ex"))
-    df = df.select("*", *[c.alias(name) for name, c in stats.items()])
-    # deterministic partition key: hash-bucket of url (skew-free even
-    # when one domain holds 30% of rows — url, not domain, is hashed)
-    df = df.withColumn(
-        "part_key", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
+    """PHASE 2a: attach the stats columns, the partition key and the
+    per-language thresholds to phase-1 output (fresh from the Python
+    stage or re-read from a checkpoint): pure codegen SQL text, no join.
+
+    ``part_key`` is a hash bucket of url, not of the domain, so it stays
+    skew-free when one domain holds 30% of rows.  The non-empty lines
+    come from an inner projection that the three line stats share.
+    ``spark`` is unused; the signature is kept for its callers."""
+    lined = processed.selectExpr("*", f"{textstats.nonempty_lines_sql('text_ex')} AS _lines")
+    return lined.selectExpr(
+        *[sql_ident(c) for c in processed.columns],
+        *textstats.all_stats("text_ex", "_lines"),
+        f"CAST(pmod(xxhash64(url), {int(n_buckets)}) AS INT) AS part_key",
+        *lang_threshold_sql(),
     )
-    return join_lang_thresholds(df, spark)
 
 
 def _fold_results(
     enriched: DataFrame, registry: RuleRegistry
 ) -> tuple[DataFrame, list[RuleBuildOutcome]]:
-    """PHASE 2b: rule columns -> reasons/keep -> doc_results."""
+    """PHASE 2b: rule columns -> reasons/keep -> doc_results.  The
+    quality score is the fraction of applied rules passed (diagnostic,
+    not a gate)."""
     evaluated, outcomes = evaluate_rules(enriched, registry)
     n_applied = max(len([o for o in outcomes if o.column is not None]), 1)
-    # quality score: fraction of rules passed (diagnostic, not gate)
-    score = (
-        (F.lit(n_applied) - F.size(F.col("reasons"))).cast("double") / n_applied
-    ).alias("quality_score")
-    result = evaluated.select(
-        F.col("url"),
-        F.col("keep"),
-        F.col("reasons"),
-        F.col("scrubbed_text"),
-        F.col("lang_pred"),
-        score,
-        pii_hits_map_col(prefix="hits_").alias("pii_hits"),
-        F.col("part_key"),
+    hits = ", ".join(f"'{k}', hits_{k}" for k in SCRUB_KINDS)
+    result = evaluated.selectExpr(
+        "url",
+        "keep",
+        "reasons",
+        "scrubbed_text",
+        "lang_pred",
+        f"CAST({n_applied} - size(reasons) AS DOUBLE) / {n_applied} AS quality_score",
+        f"map({hits}) AS pii_hits",
+        "part_key",
     )
     return result, outcomes
 
@@ -257,12 +257,9 @@ def rule_metrics_aggs(rule_names: list[str]) -> list[Column]:
     """Docs in/out and one ``fail_<rule>`` count per rule, read from
     the ``reasons`` array: a rule's failure is recorded there, so
     ``fail_<rule> = count_if(array_contains(reasons, rule))``."""
-    return [
-        F.count(F.lit(1)).alias("docs_in"),
-        F.count_if(F.col("keep")).alias("docs_out"),
-    ] + [
-        F.count_if(F.array_contains(F.col("reasons"), name)).alias(f"fail_{name}")
-        for name in rule_names
+    return [F.expr("count(1) AS docs_in"), F.expr("count_if(keep) AS docs_out")] + [
+        F.expr(f"count_if(array_contains(reasons, {sql_str(n)})) AS {sql_ident('fail_' + n)}")
+        for n in rule_names
     ]
 
 

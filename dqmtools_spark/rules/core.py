@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dqmtools_spark.schemas import BAD, INVALID, OK, WARNING
+from dqmtools_spark.sqltext import sql_ident, sql_str
 
 
 @dataclass(frozen=True)
@@ -93,11 +94,7 @@ def _plan_rules(df: DataFrame, registry: RuleRegistry) -> list[RuleBuildOutcome]
         except Exception as exc:  # noqa: BLE001 — R2 exception→BAD
             outcomes.append(RuleBuildOutcome(rule, None, BAD, repr(exc)))
             continue
-        # null-safe: a null stat (e.g. empty doc) counts as FAIL, so a
-        # poisoned row can't silently pass (R2 in per-doc form).
-        outcomes.append(
-            RuleBuildOutcome(rule, F.coalesce(col, F.lit(False)), OK)
-        )
+        outcomes.append(RuleBuildOutcome(rule, col, OK))
     return outcomes
 
 
@@ -105,28 +102,30 @@ def evaluate_rules(
     df: DataFrame, registry: RuleRegistry, prefix: str = "pass_"
 ) -> tuple[DataFrame, list[RuleBuildOutcome]]:
     """Attach one boolean ``pass_<rule>`` column per applicable rule,
-    plus ``reasons`` (failed rule names) and ``keep``.
+    plus ``reasons`` (failed rule names, in registration order) and
+    ``keep``.
 
-    Single projection — Catalyst sees every rule as a plain expression
-    over the stats columns, so the whole rule suite is one codegen stage
-    with zero shuffles.
+    Two projections: the Columns the rules return, then one
+    ``selectExpr`` of SQL text for the rest.  Catalyst sees every rule
+    as a plain expression over the stats columns, so the whole rule
+    suite is one codegen stage with zero shuffles.
     """
     outcomes = _plan_rules(df, registry)
     applied = [o for o in outcomes if o.column is not None]
-    out = df.select(
-        "*", *[o.column.alias(f"{prefix}{o.rule.name}") for o in applied]
-    )
-    reason_entries = [
-        F.when(~F.col(f"{prefix}{o.rule.name}"), F.lit(o.rule.name))
-        for o in applied
-    ]
+    raw = df.select("*", *[o.column.alias(prefix + o.rule.name) for o in applied])
+    # null-safe: a null pass (e.g. a null stat on an empty doc) counts as
+    # FAIL, so a poisoned row can't silently pass (R2 in per-doc form)
+    passes = {o.rule.name: f"coalesce({sql_ident(prefix + o.rule.name)}, false)" for o in applied}
+    failed = [f"CASE WHEN NOT {p} THEN {sql_str(n)} END" for n, p in passes.items()]
     reasons = (
-        F.array_compact(F.array(*reason_entries))
-        if reason_entries
-        else F.array().cast("array<string>")
+        f"array_compact(array({', '.join(failed)}))" if failed
+        else "CAST(array() AS ARRAY<STRING>)"
     )
-    out = out.withColumn("reasons", reasons).withColumn(
-        "keep", F.size(F.col("reasons")) == 0
+    out = raw.selectExpr(
+        *map(sql_ident, df.columns),
+        *[f"{p} AS {sql_ident(prefix + n)}" for n, p in passes.items()],
+        f"{reasons} AS reasons",
+        f"{' AND '.join(passes.values()) or 'true'} AS keep",
     )
     return out, outcomes
 

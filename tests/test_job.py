@@ -189,18 +189,18 @@ def _jobs_per_layer(spark, monkeypatch, call) -> dict[str, int]:
 @pytest.mark.parametrize(
     "first, out, thresholds, expect",
     [
-        # phase 1 written to the text checkpoint, then as below: 11 jobs
+        # phase 1 written to the text checkpoint, then as below: 10 jobs
         pytest.param(
             False, "out", None,
-            dict(plan=1, checkpoint=6, cube=2, history=1, rule_metrics=1, other=0),
+            dict(plan=1, checkpoint=5, cube=2, history=1, rule_metrics=1, other=0),
             id="fresh",
         ),
         # changed thresholds over the complete checkpoint, a new output:
         # the plan reads no file, the cube is its shuffle and result
-        # stages, and each write is one job; 10 jobs
+        # stages, and each write is one job; 9 jobs
         pytest.param(
             True, "rerun", CHANGED_THRESHOLDS,
-            dict(plan=0, checkpoint=6, cube=2, history=1, rule_metrics=1, other=0),
+            dict(plan=0, checkpoint=5, cube=2, history=1, rule_metrics=1, other=0),
             id="rerun",
         ),
         # the first output again: the done-bucket read and nothing else

@@ -59,31 +59,8 @@ def test_signatures_equal_hof_reference(spark, texts):
         assert (want[i] is None) == (t is None)
 
 
-def _count_commands(spark, fn) -> int:
-    """Py4J commands the calling thread sends while ``fn()`` runs.  The
-    releases of garbage JVM objects go out from py4j's finalizer thread
-    whenever Python frees a proxy, so they are left out of the count."""
-    import threading
-
-    client = spark.sparkContext._gateway._gateway_client
-    me = threading.get_ident()
-    sent = [0]
-    send = client.send_command
-
-    def counting(*args, **kwargs):
-        sent[0] += threading.get_ident() == me
-        return send(*args, **kwargs)
-
-    client.send_command = counting
-    try:
-        fn()
-    finally:
-        client.send_command = send
-    return sent[0]
-
-
 @pytest.mark.parametrize("tier", [minhash_lsh_pairs, minhash_lsh_pairs_md5])
-def test_lazy_build_py4j_commands(spark, sf_dir, tier):
+def test_lazy_build_py4j_commands(spark, sf_dir, count_py4j_commands, tier):
     """Building the pair plan crosses the Python-JVM boundary a few
     hundred times, not once per hash, band and min."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -91,7 +68,7 @@ def test_lazy_build_py4j_commands(spark, sf_dir, tier):
     try:
         tier(d, "text", "doc_id", eager=False)  # first build loads classes
         spark.catalog.clearCache()
-        n = _count_commands(spark, lambda: tier(d, "text", "doc_id", eager=False))
+        n = count_py4j_commands(lambda: tier(d, "text", "doc_id", eager=False))
     finally:
         spark.catalog.clearCache()
     assert n <= MAX_BUILD_COMMANDS, n

@@ -86,8 +86,8 @@ PLAN_AUDIT = {
     "minhash_pairs": dict(exchanges=39, shuffle_exchanges=33, broadcast_joins=6),
     "multi_join_agg": dict(exchanges=3, shuffle_exchanges=1, broadcast_joins=2, pushed_filters=3),
     "ngram_jaccard": dict(exchanges=1, nested_loop_joins=1, pushed_filters=2),
-    "pipeline_full": dict(exchanges=1, broadcast_joins=1, python_evals=1),
-    "pipeline_staged_agg": dict(exchanges=2, shuffle_exchanges=1, broadcast_joins=1),
+    "pipeline_full": dict(python_evals=1),
+    "pipeline_staged_agg": dict(exchanges=1, shuffle_exchanges=1),
     "pivot_matrix": dict(exchanges=2, shuffle_exchanges=2, pushed_filters=1),
     "prescale_sample": dict(exchanges=1, shuffle_exchanges=1, pushed_filters=1),
     "pricing_summary": dict(exchanges=1, shuffle_exchanges=1, pushed_filters=1),

@@ -33,12 +33,17 @@ def _python_node_counts(df) -> dict[str, int]:
 ONE_MAP_IN_ARROW = {"MapInArrow": 1, "MapInPandas": 0, "ArrowEvalPython": 0}
 
 
+def _no_joins(audit: dict) -> bool:
+    joins = ("broadcast_joins", "sort_merge_joins", "nested_loop_joins")
+    return all(audit[j] == 0 for j in joins)
+
+
 def test_pipeline_plan_one_python_stage_no_shuffle(spark, tmp_path):
     """The per-doc pipeline over a pages table must be: scan -> ONE
-    fused ``mapInArrow`` -> codegen rules -> broadcast threshold join.
-    Zero shuffle exchanges (the only exchange in production is the
-    partitioned write).  The synth pages are written to parquet first,
-    so their own generator is not in the plan."""
+    fused ``mapInArrow`` -> codegen stats, per-language thresholds and
+    rules.  No join and zero shuffle exchanges (the only exchange in
+    production is the partitioned write).  The synth pages are written
+    to parquet first, so their own generator is not in the plan."""
     from dqmtools_spark.pipeline import run_pipeline
     from dqmtools_spark.schemas import PAGES_SCHEMA
     from dqmtools_spark.sources.tables import read_table
@@ -51,14 +56,14 @@ def test_pipeline_plan_one_python_stage_no_shuffle(spark, tmp_path):
     assert audit["python_evals"] == 1, audit
     assert audit["row_python_evals"] == 0, "row-at-a-time Python in hot path"
     assert audit["shuffle_exchanges"] == 0, "unexpected shuffle in per-doc path"
-    assert audit["broadcast_joins"] >= 1, "lang-threshold dim not broadcast"
+    assert _no_joins(audit), audit
     assert _python_node_counts(result) == ONE_MAP_IN_ARROW, "phase 1 not one pass"
 
 
 def test_warc_pipeline_plan_one_map_in_arrow_no_shuffle(spark, tmp_path):
     """WARC input: binaryFile scan -> ONE mapInArrow that parses and
-    scores the pages -> codegen rules -> broadcast threshold join.  No
-    other Python node: html never crosses back to the JVM."""
+    scores the pages -> codegen stats and rules, with no join.  No other
+    Python node: html never crosses back to the JVM."""
     from dqmtools_spark.pipeline import run_pipeline
     from dqmtools_spark.sources.warc import read_warc, write_warc_gz
 
@@ -72,7 +77,7 @@ def test_warc_pipeline_plan_one_map_in_arrow_no_shuffle(spark, tmp_path):
     assert audit["python_evals"] == 1, audit
     assert audit["row_python_evals"] == 0, audit
     assert audit["shuffle_exchanges"] == 0, audit
-    assert audit["broadcast_joins"] >= 1, audit
+    assert _no_joins(audit), audit
     assert _python_node_counts(result) == ONE_MAP_IN_ARROW
 
 
@@ -178,7 +183,8 @@ def test_drop_duplicate_clusters_below_bound_one_job_no_join(spark):
 def test_staged_jvm_phase_is_pure_codegen(spark, tmp_path):
     """Phase 2 of the staged pipeline (stats + rules from the text
     checkpoint) must contain ZERO Python evals — that is the property
-    that lets rules re-run without re-extracting at 100 TB."""
+    that lets rules re-run without re-extracting at 100 TB — and no
+    join or shuffle."""
     from dqmtools_spark.pipeline import _fold_results, jvm_phase, python_phase
     from dqmtools_spark.rules.builtin import default_registry
     from dqmtools_spark.synth import synth_pages
@@ -190,7 +196,7 @@ def test_staged_jvm_phase_is_pure_codegen(spark, tmp_path):
     audit = plan_audit(result)
     assert audit["python_evals"] == 0
     assert audit["shuffle_exchanges"] == 0
-    assert audit["broadcast_joins"] >= 1
+    assert _no_joins(audit), audit
 
 
 def test_minhash_md5_banded_join_not_cartesian(spark, sf_dir):

@@ -6,6 +6,8 @@
   still produces identical results; force=True rebuilds.
 - simhash_pairs with the default banding emits EXACTLY the brute-force
   set of pairs with Hamming <= max_hamming (pigeonhole recall 1.0).
+- the Py4J commands of a staged plan build and of a SimHash signature
+  plan build, pinned exactly.
 """
 
 from __future__ import annotations
@@ -16,6 +18,15 @@ import pytest
 
 from dqmtools_spark.pipeline import run_pipeline_staged, staged_checkpoint_complete
 from dqmtools_spark.synth import synth_pages
+
+# Py4J commands on the calling thread for one plan build after a warm-up
+# build.  run_pipeline_staged over a complete checkpoint of 300 synth
+# pages sent 942 while the stats, the rules and the threshold join were
+# Column calls, and 238 with phase 2 as SQL text
+STAGED_BUILD_COMMANDS = 238
+# simhash_signatures over the sf0.001 documents, default and md5 token
+# hashes, sent 2,215 and 2,095 with one Column call per bit sum and OR term
+SIMHASH_BUILD_COMMANDS = {"xxhash64": 136, "md5_hash60": 144}
 
 
 def _success_mtime(path: str) -> float:
@@ -54,6 +65,30 @@ def test_half_written_checkpoint_is_rebuilt(spark, tmp_path):
     res, _ = run_pipeline_staged(spark, pages, ckpt, n_buckets=4)
     assert res.count() == 60
     assert staged_checkpoint_complete(spark, ckpt)
+
+
+def test_staged_build_py4j_commands(spark, tmp_path, count_py4j_commands):
+    """A threshold rerun over a complete checkpoint builds phase 2 as a
+    few SQL-text projections, not one Column call per stat and rule."""
+    pages = synth_pages(spark, 300, seed=7)
+    ckpt = str(tmp_path / "text_checkpoint")
+    run_pipeline_staged(spark, pages, ckpt, n_buckets=8)  # writes, then warms
+    n = count_py4j_commands(lambda: run_pipeline_staged(spark, pages, ckpt, n_buckets=8))
+    assert n == STAGED_BUILD_COMMANDS, n
+
+
+@pytest.mark.parametrize("token_hash", ["xxhash64", "md5_hash60"])
+def test_simhash_signature_build_py4j_commands(spark, sf_dir, count_py4j_commands, token_hash):
+    """The per-bit vote sums and the OR chain are SQL text, so the
+    build does not grow with ``n_bits``."""
+    from dqmtools_spark.functions.hashing import md5_hash60
+    from dqmtools_spark.operators.dedup import simhash_signatures
+
+    kw = {"xxhash64": {}, "md5_hash60": dict(n_bits=60, token_hash=md5_hash60)}[token_hash]
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    simhash_signatures(d, "doc_id", "text", **kw)  # first build loads classes
+    n = count_py4j_commands(lambda: simhash_signatures(d, "doc_id", "text", **kw))
+    assert n == SIMHASH_BUILD_COMMANDS[token_hash], n
 
 
 @pytest.mark.parametrize("max_hamming", [2, 6])
